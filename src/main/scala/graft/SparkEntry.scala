@@ -1186,24 +1186,13 @@ object SparkEntry {
 
   private def runStream(s: SparkSession, out: DataFrame): DataFrame = {
     val dst = scratchDir("graft_stream_out_")
-    val t0 = System.nanoTime()
     val q = out.writeStream.format("parquet")
       .option("path", s"$dst/data")
       .option("checkpointLocation", s"$dst/chk")
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    val t1 = System.nanoTime()
     q.awaitTermination()
-    val t2 = System.nanoTime()
-    // Floor decomposition for the bench's 52 single-batch streams
-    // (guide §1: measure first): per-batch durationMs breakdown + the
-    // start/await wall split, printed to stderr only when asked.
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROFILE")) {
-      System.err.println(f"[streamprof] start=${(t1 - t0) / 1e9}%.3f await=${(t2 - t1) / 1e9}%.3f batches=${q.recentProgress.length}")
-      q.recentProgress.foreach(p => System.err.println("[streamprof] " + p.json))
-      q.explain() // last micro-batch physical plan, for plans/rNN evidence
-    }
     // the result schema is the stream frame's own — passing it skips the
     // footer-sampling schema-inference job on every read-back
     s.read.schema(out.schema).parquet(s"$dst/data")
@@ -2912,12 +2901,13 @@ object SparkEntry {
   }
 
   /** Streaming KMV distinct-token sketch ([[graft.streaming.StreamingTSDF
-    * .kmvMins]]): per-source running k-min sets as a changelog — every
-    * hash that ever ENTERS the running set is emitted once, the sink is a
-    * superset of the final k-min set, and the batch k-min fold
-    * ([[graft.pipeline.Sketch.kmvFromHashes]]) over the sink reproduces
-    * the batch sketch exactly for any micro-batch split — so the query
-    * shares q_kmv_distinct's oracle verbatim. */
+    * .kmvMins]]): each (input partition, micro-batch) statelessly emits its
+    * own k smallest distinct hashes per source, so the sink is a superset
+    * of the final k-min set (a hash may arrive more than once), and the
+    * k-min re-fold ([[graft.pipeline.Sketch.kmvFromHashes]], the k
+    * smallest DISTINCT) over the sink reproduces the batch sketch exactly
+    * for any partitioning and micro-batch split — so the query shares
+    * q_kmv_distinct's oracle verbatim. */
   private def qStreamKmv(s0: SparkSession, dir: String): DataFrame = {
     val s = streamSession(s0)
     val toks = docsStream(s, dir).select(col("source"),
@@ -2945,13 +2935,13 @@ object SparkEntry {
       space = graft.pipeline.Hashing.PW)
   }
 
-  /** Streaming Count-Min heavy hitters: token cell-count DELTAS from the
-    * ingest stream ([[graft.streaming.StreamingTSDF.cmsDeltas]], corpus-
-    * global series spread over 32 salt groups) sum-rolled into the exact
-    * batch grid, probed with the unchanged batch reader — CMS counters are
-    * additive, so the roll equals [[graft.pipeline.Sketch.cmsBuild]] for
-    * any micro-batching and the query shares q_cms_heavy's oracle
-    * verbatim. */
+  /** Streaming Count-Min heavy hitters: token cell-count DELTAS that each
+    * (input partition, micro-batch) emits statelessly
+    * ([[graft.streaming.StreamingTSDF.cmsDeltas]], one corpus-global
+    * series), sum-folded into the exact batch grid and probed with the
+    * unchanged batch reader — CMS counters are additive, so the fold
+    * equals [[graft.pipeline.Sketch.cmsBuild]] for any partitioning and
+    * micro-batching and the query shares q_cms_heavy's oracle verbatim. */
   private def qStreamCms(s0: SparkSession, dir: String): DataFrame = {
     val s = streamSession(s0)
     val tokStream = docsStream(s, dir).select(
@@ -2972,13 +2962,13 @@ object SparkEntry {
         (col("cms_est") - col("true_cnt")).alias("over_err"))
   }
 
-  /** Streaming Bloom filter build: the history corpus's set bits emitted
-    * as an emit-once CHANGELOG ([[graft.streaming.StreamingTSDF
-    * .bloomBits]]), sum-rolled per word into the exact batch filter (each
-    * bit arrives once, so the sum IS the bitwise OR), then probed with the
-    * unchanged batch [[graft.pipeline.Sketch.bloomProbe]] — the streaming
-    * face of q_bloom's incremental-dedup prefilter, sharing its oracle
-    * verbatim. */
+  /** Streaming Bloom filter build: each (input partition, micro-batch)
+    * statelessly emits, per word, the OR of the history corpus's masks it
+    * saw ([[graft.streaming.StreamingTSDF.bloomBits]]); a bit may arrive
+    * more than once, so the sink folds with `bit_or` per word (idempotent)
+    * into the exact batch filter, then probed with the unchanged batch
+    * [[graft.pipeline.Sketch.bloomProbe]] — the streaming face of q_bloom's
+    * incremental-dedup prefilter, sharing its oracle verbatim. */
   private def qStreamBloom(s0: SparkSession, dir: String): DataFrame = {
     val s = streamSession(s0)
     val hist = docsStream(s, dir).filter(col("doc_id") % 3 =!= 0)
@@ -2998,15 +2988,16 @@ object SparkEntry {
         (col("doc_id") % 3 =!= 0).alias("in_history"))
   }
 
-  /** Streaming Gram trainer feed: exact integer second-moment DELTAS from
-    * the embedding ingest stream ([[graft.streaming.StreamingTSDF
-    * .gramDeltas]], corpus-global accumulation spread over 32 salt
-    * groups) sum-rolled per cell into the exact batch grid — Gram sums
-    * are additive, so the roll equals [[graft.pipeline.Pca.gramMatrix]]
-    * for any micro-batching and the query shares q_gram_matrix's oracle
-    * verbatim. This is the streaming face of the one-pass PCA/covariance
-    * trainer: an incremental model refresh folds the sink and re-runs the
-    * driver-side eigensolve without ever rescanning the corpus. */
+  /** Streaming Gram trainer feed: exact integer second-moment DELTAS that
+    * each (input partition, micro-batch) of the embedding ingest stream
+    * emits statelessly ([[graft.streaming.StreamingTSDF.gramDeltas]]),
+    * sum-folded per cell into the exact batch grid — Gram sums are
+    * additive, so the fold equals [[graft.pipeline.Pca.gramMatrix]] for
+    * any partitioning and micro-batching and the query shares
+    * q_gram_matrix's oracle verbatim. This is the streaming face of the
+    * one-pass PCA/covariance trainer: an incremental model refresh folds
+    * the sink and re-runs the driver-side eigensolve without ever
+    * rescanning the corpus. */
   private def qStreamGram(s0: SparkSession, dir: String): DataFrame = {
     val s = streamSession(s0)
     val vecs = embStream(s, dir).select(

@@ -329,9 +329,7 @@ object Dedup {
     var it = 0
     var converged = false
     while (!converged && it < maxIterations) {
-      val t0 = System.nanoTime()
-      val agg = labels.agg(sum(col("cluster_id")), count(lit(1))).head()
-      val sumNow = agg.getLong(0)
+      val sumNow = labels.agg(sum(col("cluster_id"))).head().getLong(0)
       converged = prevSum.contains(sumNow)
       prevSum = Some(sumNow)
       if (!converged) {
@@ -350,9 +348,6 @@ object Dedup {
         labels = next
         it += 1
       }
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        println(f"[cc] pass $it sum=${agg.getLong(0)} n=${agg.getLong(1)} " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2fs converged=$converged")
     }
     (labels, it)
   }
@@ -407,7 +402,6 @@ object Dedup {
     var it = 0
     var converged = e.isEmpty
     while (!converged && it < maxIterations) {
-      val t0 = System.nanoTime()
       val next = smallStar(largeStar(e)).transform(Materializer(_, eager = true))
       // bit_xor, not sum: full-range 64-bit hashes overflow an ANSI sum,
       // and the edge set is distinct so xor is a faithful set signature
@@ -419,9 +413,6 @@ object Dedup {
       prev = Some(sig)
       e = next
       it += 1
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        println(f"[cc-star] round $it edges=${sig._1} " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2fs converged=$converged")
     }
     // fixpoint edges are (child → component-min) stars; roots label
     // themselves, and ids whose every input edge was a self-loop fall

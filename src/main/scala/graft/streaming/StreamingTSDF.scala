@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -12,9 +15,11 @@ import graft.tsdf.Resample
   * The reference library is batch-only (no readStream/watermark anywhere in
   * it — SURVEY §2.9); these operators extend the same semantics to streams
   * the Spark-native way: event-time windows + watermarks for resampling and
-  * grouped stats, and `flatMapGroupsWithState` for run-length state
-  * tracking. Each batch operator's bucket/aggregate expressions are reused,
-  * so a query can move batch→streaming without changing its semantics.
+  * grouped stats, one keyed-scan kernel ([[seriesScan]]) for the per-series
+  * recursions, and one per-partition fold ([[partitionFold]]) for the
+  * additive delta feeds. Each batch operator's bucket/aggregate expressions
+  * are reused, so a query can move batch→streaming without changing its
+  * semantics.
   */
 object StreamingTSDF {
 
@@ -33,6 +38,126 @@ object StreamingTSDF {
     seriesCols.zipWithIndex.map { case (c, i) =>
       split(col("series"), KeySep, -1).getItem(i).cast(schema(c).dataType).alias(c)
     }
+
+  private def enc[T: TypeTag]: Encoder[T] = ExpressionEncoder[T]()
+
+  // ------------------------------------------------ the keyed-scan kernel
+  // not private: encoder-generated code must be able to access these
+  /** One keyed-scan row: the packed series key, its (tsUs, tie) position on
+    * the scan axis, the operator's payload `x`, and the raw event time the
+    * optional TTL watermark is declared on (a field, so the watermarked
+    * column survives into the stateful operator's input). */
+  case class ScanEvent[P](series: String, tsUs: Long, tie: Long, x: P,
+      eventTime: java.sql.Timestamp)
+  /** One series' scan state: the operator's recursion state `s` and the
+    * series high-water mark — the (tsUs, tie) of the last row that
+    * advanced it. */
+  case class Scan[S](s: S, hwUs: Long, hwTie: Long)
+
+  private def timeoutFor(stateTtl: Option[String]): GroupStateTimeout =
+    if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
+    else GroupStateTimeout.NoTimeout()
+
+  /** TTL keep-alive: restart the eviction clock at `lastMs`, floor-clamped
+    * above the current watermark (a timeout may not lie behind it). */
+  private def keepAlive(state: GroupState[_], stateTtl: Option[String],
+      lastMs: => Long): Unit =
+    stateTtl.foreach(ttl => state.setTimeoutTimestamp(
+      math.max(lastMs, state.getCurrentWatermarkMs() + 1), ttl))
+
+  /** The keyed-scan kernel every stateful series twin runs on: each input
+    * is projected to (series, tsUs, tie, x, eventTime), the inputs are
+    * unioned and grouped by series, and per micro-batch each series' rows
+    * are fed to `step` in (tsUs, tie) order together with the state the
+    * previous row left. `step` returns `Some(state)` to consume the row
+    * (the state and the high-water mark advance to it) or `None` to leave
+    * both untouched, plus the rows to emit. State is kept once a row has
+    * been consumed; the per-batch emission passes through `perBatch`.
+    *
+    * Late-data and TTL contract, shared by every scan operator:
+    *  - A row BEHIND the series high-water mark is DROPPED: it emits
+    *    nothing and leaves state untouched — folding it in would rewind
+    *    state that on-time history already advanced (use a watermark sized
+    *    to the expected lateness if late rows must count). Without `tie`,
+    *    behind means strictly older, so rows sharing a timestamp all
+    *    process; with `tie`, (tsUs, tie) is a total order and a row AT the
+    *    mark is a replay and drops too. `dropLate = false` hands every row
+    *    to `step` (asofJoin, stateIntervalRuns).
+    *  - `stateTtl` (optional) declares an event-time watermark of that
+    *    delay and evicts a series once the watermark passes its mark by
+    *    the TTL — total state is then bounded by the series ACTIVE within
+    *    one TTL horizon. An evicted series' next row starts it afresh,
+    *    exactly like a series never seen; `flush` may emit rows for the
+    *    evicted state. Without a TTL, state is kept forever.
+    *
+    * `axisUs` replaces `tsCol`'s micros as the scan axis (the TTL clock
+    * stays on `tsCol`). */
+  private def seriesScan[P: TypeTag, S: TypeTag, O: TypeTag](
+      dfs: Seq[DataFrame], tsCol: String, seriesCols: Seq[String], x: Column,
+      stateTtl: Option[String], tie: Option[Column] = None,
+      axisUs: Option[Column] = None, dropLate: Boolean = true,
+      flush: (String, Scan[S]) => Iterator[O] =
+        (_: String, _: Scan[S]) => Iterator.empty,
+      perBatch: Seq[O] => Iterator[O] = (o: Seq[O]) => o.iterator)(
+      step: (String, Option[Scan[S]], ScanEvent[P]) => (Option[S], IterableOnce[O]))
+      : Dataset[O] = {
+    val events = dfs.map { df =>
+      val projected = df.select(seriesKey(seriesCols).alias("series"),
+        axisUs.getOrElse(unix_micros(col(tsCol))).alias("tsUs"),
+        tie.getOrElse(lit(0L)).cast(LongType).alias("tie"), x.alias("x"),
+        col(tsCol).alias("eventTime"))
+      stateTtl.fold(projected)(ttl => projected.withWatermark("eventTime", ttl))
+    }.reduce(_ unionByName _).as(enc[ScanEvent[P]])
+    val totalOrder = tie.isDefined
+    events.groupByKey(_.series)(enc[String])
+      .flatMapGroupsWithState(OutputMode.Append(), timeoutFor(stateTtl)) {
+        (key: String, rows: Iterator[ScanEvent[P]], state: GroupState[Scan[S]]) =>
+          if (state.hasTimedOut) {
+            val last = state.get
+            state.remove()
+            flush(key, last)
+          } else {
+            var cur = state.getOption
+            val out = Seq.newBuilder[O]
+            rows.toSeq.sortBy(e => (e.tsUs, e.tie)).foreach { e =>
+              val late = dropLate && cur.exists(c => e.tsUs < c.hwUs ||
+                (totalOrder && e.tsUs == c.hwUs && e.tie <= c.hwTie))
+              if (!late) {
+                val (next, emitted) = step(key, cur, e)
+                next.foreach(s => cur = Some(Scan(s, e.tsUs, e.tie)))
+                out ++= emitted
+              }
+            }
+            cur.foreach { c =>
+              state.update(c)
+              keepAlive(state, stateTtl, c.hwUs / 1000)
+            }
+            perBatch(out.result())
+          }
+      }(enc[Scan[S]], enc[O])
+  }
+
+  /** [[seriesScan]] over `valueCol` as a double, for the twins whose output
+    * is series + ts + value + extra columns: `step` emits
+    * (series, tsUs, value, extra…) and `names` names the extras. */
+  private def valueScan[S: TypeTag, O <: Product : TypeTag](df: DataFrame,
+      tsCol: String, seriesCols: Seq[String], valueCol: String,
+      stateTtl: Option[String], names: String*)(
+      step: (String, Option[Scan[S]], ScanEvent[Double]) => (Option[S], IterableOnce[O]))
+      : DataFrame =
+    valueCols(seriesScan[Double, S, O](Seq(df), tsCol, seriesCols,
+      col(valueCol).cast(DoubleType), stateTtl)(step),
+      df, tsCol, seriesCols, valueCol, names)
+
+  private def valueCols(out: Dataset[_], df: DataFrame, tsCol: String,
+      seriesCols: Seq[String], valueCol: String, names: Seq[String]): DataFrame = {
+    val extras = names.indices.map(i => s"__x$i")
+    out.toDF(Seq("series", "tsUs", "value") ++ extras: _*)
+      .select(typedSeriesCols(df.schema, seriesCols) ++
+        (timestamp_micros(col("tsUs")).alias(tsCol) +:
+          col("value").alias(valueCol) +:
+          extras.zip(names).map { case (e, n) => col(e).alias(n) }): _*)
+  }
 
   /** Streaming resample: tumbling event-time buckets with a watermark.
     * `func ∈ {floor, mean, min, max, ceil}` with the same argmin/argmax
@@ -97,24 +222,19 @@ object StreamingTSDF {
   }
 
   // ------------------------------------------------ streaming as-of join
-  // not private: encoder-generated code must be able to access these
-  case class AsOfEvent(series: String, tsUs: Long, side: Int, vals: Seq[Double],
-      eventTime: java.sql.Timestamp)
-  case class LastRight(tsUs: Long, vals: Seq[Double])
-  case class AsOfOut(series: String, tsUs: Long, rightTsUs: Option[Long],
-      rightVals: Option[Seq[Double]])
-
   /** Streaming as-of join: each left-stream row attaches the latest
     * right-stream observation with `right.ts <= left.ts` in its series
     * (ties resolve right-before-left, like the batch union path's rec_ind).
     *
-    * Realization: the two streams union into one keyed stream; state per
-    * series is ONE record — the latest right row seen (constant size, no
-    * growing buffers). Rows within a micro-batch process in event-time
-    * order; a right row that arrives after a later-ts left row was already
-    * emitted does not rewrite the emitted answer — the documented
-    * append-mode trade-off vs the batch operator (use watermarked batch
-    * re-runs when exactness over late data matters).
+    * Realization: the two streams union into one [[seriesScan]] (each side
+    * keeps its own watermark, so the join's watermark is the slower
+    * side's); state per series is ONE record — the latest right row seen
+    * (constant size, no growing buffers), whose timestamp is the series'
+    * mark. Rows within a micro-batch process in event-time order; a right
+    * row that arrives after a later-ts left row was already emitted does
+    * not rewrite the emitted answer — the documented append-mode trade-off
+    * vs the batch operator (use watermarked batch re-runs when exactness
+    * over late data matters). No row is dropped as late.
     *
     * v1 contract: right-side payload is its numeric metric columns.
     *
@@ -127,58 +247,22 @@ object StreamingTSDF {
   def asofJoin(left: DataFrame, right: DataFrame, tsCol: String,
       seriesCols: Seq[String], rightMetricCols: Seq[String],
       stateTtl: Option[String] = None): DataFrame = {
-    val spark = left.sparkSession
-    import spark.implicits._
-    def keyed(df0: DataFrame, side: Int, vals: Seq[String]) = {
-      // the watermark must be declared on a column that SURVIVES into the
-      // stateful operator's input, so keep the raw timestamp alongside the
-      // derived micros and watermark it after the projection
-      val base = df0.select(
-        seriesKey(seriesCols).alias("series"),
-        unix_micros(col(tsCol)).alias("tsUs"),
-        lit(side).alias("side"),
-        array(vals.map(col(_).cast(DoubleType)): _*).alias("vals"),
-        col(tsCol).alias("eventTime"))
-      stateTtl.fold(base)(ttl => base.withWatermark("eventTime", ttl))
+    def side(df: DataFrame, s: Long, vals: Seq[String]) = df
+      .withColumn("__side", lit(s))
+      .withColumn("__vals", array(vals.map(col(_).cast(DoubleType)): _*))
+    // right (-1) before left (1) at equal ts — inclusive as-of
+    val out = seriesScan[Seq[Double], Seq[Double],
+        (String, Long, Option[Long], Option[Seq[Double]])](
+      Seq(side(left, 1L, Seq.empty), side(right, -1L, rightMetricCols)),
+      tsCol, seriesCols, col("__vals"), stateTtl, tie = Some(col("__side")),
+      dropLate = false) { (key, last, e) =>
+      if (e.tie < 0) (if (last.forall(_.hwUs <= e.tsUs)) Some(e.x) else None, None)
+      else (None, Some((key, e.tsUs, last.map(_.hwUs), last.map(_.s))))
     }
-    val unioned = keyed(left, 1, Seq.empty)
-      .unionByName(keyed(right, -1, rightMetricCols))
-      .as[AsOfEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = unioned
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[AsOfEvent], state: GroupState[LastRight]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            // right (-1) before left (1) at equal ts — inclusive as-of
-            val sorted = rows.toSeq.sortBy(e => (e.tsUs, e.side))
-            var last = state.getOption.orNull
-            val outRows = Seq.newBuilder[AsOfOut]
-            sorted.foreach { e =>
-              if (e.side < 0) {
-                if (last == null || e.tsUs >= last.tsUs) last = LastRight(e.tsUs, e.vals)
-              } else {
-                outRows += AsOfOut(key, e.tsUs,
-                  Option(last).map(_.tsUs), Option(last).map(_.vals))
-              }
-            }
-            if (last != null) {
-              state.update(last)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(last.tsUs / 1000, state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.result().iterator
-          }
-      }
     val metricsOut = rightMetricCols.zipWithIndex.map { case (m, i) =>
       element_at(col("rightVals"), i + 1).alias(s"right_$m")
     }
-    out.toDF()
+    out.toDF("series", "tsUs", "rightTsUs", "rightVals")
       .select(typedSeriesCols(left.schema, seriesCols) ++
         (timestamp_micros(col("tsUs")).alias(tsCol) +:
           timestamp_micros(col("rightTsUs")).alias(s"right_$tsCol") +:
@@ -212,217 +296,80 @@ object StreamingTSDF {
   }
 
   // ------------------------------------------------ streaming EMA
-  case class EmaEvent(series: String, tsUs: Long, value: Double,
-      eventTime: java.sql.Timestamp)
-  case class EmaState(ema: Double, lastTsUs: Long)
-
   /** Streaming exponential moving average: ema' = α·x + (1−α)·ema per
     * series, one double of state. This is the EXACT infinite-horizon
     * recursion — the batch operator approximates it with a 5-term lag
     * window (reference semantics), so the two converge as the window grows
-    * but are not bit-equal by design. Rows inside a micro-batch process in
-    * event-time order; a row arriving strictly older than the last
-    * processed timestamp is DROPPED, not folded in — folding it would
-    * rewind per-series state that on-time history already advanced (use a
-    * watermark sized to the expected lateness if late rows must count).
-    * Optional `stateTtl` evicts idle series. */
+    * but are not bit-equal by design. Late rows and `stateTtl` follow the
+    * [[seriesScan]] contract. */
   def ema(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, alpha: Double,
-      stateTtl: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[EmaState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                cur = if (cur == null) EmaState(e.value, e.tsUs)
-                  else EmaState(alpha * e.value + (1 - alpha) * cur.ema, e.tsUs)
-                Some((key, e.tsUs, e.value, cur.ema))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "ema")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("ema").alias(s"ema_$valueCol")): _*)
-  }
-
-  case class EwmVarState(mean: Double, variance: Double, lastTsUs: Long)
+      stateTtl: Option[String] = None): DataFrame =
+    valueScan[Double, (String, Long, Double, Double)](df, tsCol, seriesCols,
+        valueCol, stateTtl, s"ema_$valueCol") { (key, prev, e) =>
+      val ema = prev.fold(e.x)(p => alpha * e.x + (1 - alpha) * p.s)
+      (Some(ema), Some((key, e.tsUs, e.x, ema)))
+    }
 
   /** Streaming EW mean + variance: the [[graft.functions.EwmVarExact]]
     * recursion carried as two doubles of per-series state — bit-identical
     * to the batch window aggregate (same IEEE ops in the same order;
-    * asserted differentially). Late rows are DROPPED (state cannot
-    * rewind). Output: series + ts + value + `ewm_mean_<col>` +
-    * `ewm_var_<col>`. */
+    * asserted differentially). Late rows and `stateTtl` follow the
+    * [[seriesScan]] contract. Output: series + ts + value +
+    * `ewm_mean_<col>` + `ewm_var_<col>`. */
   def ewmVolatility(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, alpha: Double,
-      stateTtl: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[EwmVarState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                cur = if (cur == null) EwmVarState(e.value, 0.0, e.tsUs)
-                else {
-                  val d = e.value - cur.mean
-                  EwmVarState(
-                    alpha * e.value + (1 - alpha) * cur.mean,
-                    (1 - alpha) * cur.variance + alpha * d * d * (1 - alpha),
-                    e.tsUs)
-                }
-                Some((key, e.tsUs, e.value, cur.mean, cur.variance))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
+      stateTtl: Option[String] = None): DataFrame =
+    valueScan[(Double, Double), (String, Long, Double, Double, Double)](df,
+        tsCol, seriesCols, valueCol, stateTtl, s"ewm_mean_$valueCol",
+        s"ewm_var_$valueCol") { (key, prev, e) =>
+      val (mean, variance) = prev.fold((e.x, 0.0)) { p =>
+        val (m, v) = p.s
+        val d = e.x - m
+        (alpha * e.x + (1 - alpha) * m, (1 - alpha) * v + alpha * d * d * (1 - alpha))
       }
-      .toDF("series", "tsUs", "value", "mean", "variance")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("mean").alias(s"ewm_mean_$valueCol"),
-      col("variance").alias(s"ewm_var_$valueCol")): _*)
-  }
+      (Some((mean, variance)), Some((key, e.tsUs, e.x, mean, variance)))
+    }
 
   case class RsiState(avgGain: Double, avgLoss: Double, lastValue: Double,
-      nMoves: Long, lastTsUs: Long)
+      nMoves: Long)
 
   /** Streaming Wilder RSI (EMA-seeded, the [[graft.tsdf.Stats.rsi]]
     * variant): per-series state is the two EMA accumulators + the previous
     * value — bit-identical to the batch form (differentially asserted).
-    * The first row of a series emits a null rsi (no move yet); late rows
-    * are DROPPED. Output: series + ts + value + `rsi_<col>`. */
+    * The first row of a series emits a null rsi (no move yet). Late rows
+    * and `stateTtl` follow the [[seriesScan]] contract. Output: series +
+    * ts + value + `rsi_<col>`. */
   def rsi(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, n: Int,
       stateTtl: Option[String] = None): DataFrame = {
     require(n >= 1, "n must be >= 1")
     val alpha = 1.0 / n
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[RsiState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                cur = if (cur == null)
-                  RsiState(0.0, 0.0, e.value, 0L, e.tsUs)
-                else {
-                  val d = e.value - cur.lastValue
-                  val g = math.max(d, 0.0)
-                  val l = math.max(-d, 0.0)
-                  if (cur.nMoves == 0L)
-                    RsiState(g, l, e.value, 1L, e.tsUs)
-                  else RsiState(
-                    alpha * g + (1 - alpha) * cur.avgGain,
-                    alpha * l + (1 - alpha) * cur.avgLoss,
-                    e.value, cur.nMoves + 1L, e.tsUs)
-                }
-                val rsi: java.lang.Double =
-                  if (cur.nMoves == 0L || cur.avgGain + cur.avgLoss == 0.0)
-                    null
-                  else 100.0 * cur.avgGain / (cur.avgGain + cur.avgLoss)
-                Some((key, e.tsUs, e.value, Option(rsi).map(_.doubleValue)))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
+    valueScan[RsiState, (String, Long, Double, Option[Double])](df, tsCol,
+        seriesCols, valueCol, stateTtl, s"rsi_$valueCol") { (key, prev, e) =>
+      val st = prev.fold(RsiState(0.0, 0.0, e.x, 0L)) { p =>
+        val c = p.s
+        val d = e.x - c.lastValue
+        val g = math.max(d, 0.0)
+        val l = math.max(-d, 0.0)
+        if (c.nMoves == 0L) RsiState(g, l, e.x, 1L)
+        else RsiState(alpha * g + (1 - alpha) * c.avgGain,
+          alpha * l + (1 - alpha) * c.avgLoss, e.x, c.nMoves + 1L)
       }
-      .toDF("series", "tsUs", "value", "rsi")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("rsi").alias(s"rsi_$valueCol")): _*)
+      val rsi =
+        if (st.nMoves == 0L || st.avgGain + st.avgLoss == 0.0) None
+        else Some(100.0 * st.avgGain / (st.avgGain + st.avgLoss))
+      (Some(st), Some((key, e.tsUs, e.x, rsi)))
+    }
   }
-
-  case class MacdState(fast: Double, slow: Double, signal: Double,
-      lastTsUs: Long)
 
   /** Streaming MACD: the three exact-EMA recursions of
     * [[graft.tsdf.Stats.macd]] carried as three doubles of per-series
     * state — bit-identical to the batch form (the signal EMA consumes the
     * just-updated fast−slow difference, exactly as the batch second window
-    * pass consumes the materialized macd column). Late rows are DROPPED.
-    * Output: series + ts + value + `macd_<col>` + `macd_signal_<col>` +
-    * `macd_hist_<col>`. */
+    * pass consumes the materialized macd column). Late rows and `stateTtl`
+    * follow the [[seriesScan]] contract. Output: series + ts + value +
+    * `macd_<col>` + `macd_signal_<col>` + `macd_hist_<col>`. */
   def macd(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, fast: Int = 12, slow: Int = 26, signal: Int = 9,
       stateTtl: Option[String] = None): DataFrame = {
@@ -430,380 +377,121 @@ object StreamingTSDF {
     val af = 2.0 / (fast + 1)
     val as = 2.0 / (slow + 1)
     val asig = 2.0 / (signal + 1)
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[MacdState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                cur = if (cur == null) {
-                  val f = e.value; val s = e.value
-                  MacdState(f, s, f - s, e.tsUs)
-                } else {
-                  val f = af * e.value + (1 - af) * cur.fast
-                  val s = as * e.value + (1 - as) * cur.slow
-                  val m = f - s
-                  MacdState(f, s, asig * m + (1 - asig) * cur.signal, e.tsUs)
-                }
-                val m = cur.fast - cur.slow
-                Some((key, e.tsUs, e.value, m, cur.signal, m - cur.signal))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
+    valueScan[(Double, Double, Double),
+        (String, Long, Double, Double, Double, Double)](df, tsCol, seriesCols,
+        valueCol, stateTtl, s"macd_$valueCol", s"macd_signal_$valueCol",
+        s"macd_hist_$valueCol") { (key, prev, e) =>
+      val (f, s, sig) = prev.fold((e.x, e.x, e.x - e.x)) { p =>
+        val (f0, s0, sig0) = p.s
+        val f = af * e.x + (1 - af) * f0
+        val s = as * e.x + (1 - as) * s0
+        (f, s, asig * (f - s) + (1 - asig) * sig0)
       }
-      .toDF("series", "tsUs", "value", "macd", "signal", "hist")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("macd").alias(s"macd_$valueCol"),
-      col("signal").alias(s"macd_signal_$valueCol"),
-      col("hist").alias(s"macd_hist_$valueCol")): _*)
+      val m = f - s
+      (Some((f, s, sig)), Some((key, e.tsUs, e.x, m, sig, m - sig)))
+    }
   }
-
-  case class PeakState(peak: Double, lastTsUs: Long)
 
   /** Streaming running peak + drawdown: one double of per-series state (the
     * high-water mark). Max is order-independent so the twin matches
-    * [[graft.tsdf.Stats.drawdown]] bit-for-bit on raw doubles; rows inside
-    * a micro-batch process in event-time order and a row strictly older
-    * than the last processed timestamp is DROPPED (state cannot rewind —
-    * same late-data contract as [[ema]]). Output: series + ts + value +
-    * `peak_<col>` + `drawdown_<col>`. */
+    * [[graft.tsdf.Stats.drawdown]] bit-for-bit on raw doubles. Late rows
+    * and `stateTtl` follow the [[seriesScan]] contract. Output: series +
+    * ts + value + `peak_<col>` + `drawdown_<col>`. */
   def drawdown(df: DataFrame, tsCol: String, seriesCols: Seq[String],
-      valueCol: String, stateTtl: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[PeakState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                cur = if (cur == null) PeakState(e.value, e.tsUs)
-                  else PeakState(math.max(cur.peak, e.value), e.tsUs)
-                Some((key, e.tsUs, e.value, cur.peak, cur.peak - e.value))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "peak", "drawdown")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("peak").alias(s"peak_$valueCol"),
-      col("drawdown").alias(s"drawdown_$valueCol")): _*)
-  }
-
-  case class HoltState(level: Double, trend: Double, lastTsUs: Long)
+      valueCol: String, stateTtl: Option[String] = None): DataFrame =
+    valueScan[Double, (String, Long, Double, Double, Double)](df, tsCol,
+        seriesCols, valueCol, stateTtl, s"peak_$valueCol",
+        s"drawdown_$valueCol") { (key, prev, e) =>
+      val peak = prev.fold(e.x)(p => math.max(p.s, e.x))
+      (Some(peak), Some((key, e.tsUs, e.x, peak, peak - e.x)))
+    }
 
   /** Streaming Holt double-exponential smoothing: the level/trend recursion
     * of [[graft.functions.HoltExact]] carried as two doubles of per-series
     * state — bit-identical to the batch window aggregate on the same data
-    * (same IEEE ops in the same order; asserted differentially). Rows
-    * inside a micro-batch process in event-time order; a row strictly older
-    * than the last processed timestamp is DROPPED (state cannot rewind —
-    * see [[ema]]). Optional `stateTtl` evicts idle series. */
+    * (same IEEE ops in the same order; asserted differentially). Late rows
+    * and `stateTtl` follow the [[seriesScan]] contract. */
   def holt(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, alpha: Double, beta: Double,
-      stateTtl: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[HoltState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                cur = if (cur == null) HoltState(e.value, 0.0, e.tsUs)
-                  else {
-                    val newLevel = alpha * e.value + (1 - alpha) * (cur.level + cur.trend)
-                    HoltState(newLevel,
-                      beta * (newLevel - cur.level) + (1 - beta) * cur.trend, e.tsUs)
-                  }
-                Some((key, e.tsUs, e.value, cur.level, cur.trend))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
+      stateTtl: Option[String] = None): DataFrame =
+    valueScan[(Double, Double), (String, Long, Double, Double, Double)](df,
+        tsCol, seriesCols, valueCol, stateTtl, s"holt_level_$valueCol",
+        s"holt_trend_$valueCol") { (key, prev, e) =>
+      val (level, trend) = prev.fold((e.x, 0.0)) { p =>
+        val (l0, t0) = p.s
+        val level = alpha * e.x + (1 - alpha) * (l0 + t0)
+        (level, beta * (level - l0) + (1 - beta) * t0)
       }
-      .toDF("series", "tsUs", "value", "level", "trend")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("level").alias(s"holt_level_$valueCol"),
-      col("trend").alias(s"holt_trend_$valueCol")): _*)
-  }
-
-  case class KalmanState(m: Double, p: Double, k: Double, lastTsUs: Long)
+      (Some((level, trend)), Some((key, e.tsUs, e.x, level, trend)))
+    }
 
   /** Streaming 1-D local-level Kalman filter: the predict/update recursion
     * of [[graft.functions.KalmanExact]] carried as three doubles of
     * per-series state — bit-identical to the batch window aggregate on the
     * same data (same IEEE ops in the same order; asserted differentially).
-    * Rows inside a micro-batch process in event-time order; a row strictly
-    * older than the last processed timestamp is DROPPED (state cannot
-    * rewind — see [[ema]]). Optional `stateTtl` evicts idle series. */
+    * Late rows and `stateTtl` follow the [[seriesScan]] contract. */
   def kalmanLevel(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, q: Double, r: Double, p0: Option[Double] = None,
       stateTtl: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val initP = p0.getOrElse(r)
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[KalmanState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                cur = if (cur == null) KalmanState(e.value, initP, 1.0, e.tsUs)
-                  else {
-                    val pPred = cur.p + q
-                    val k = pPred / (pPred + r)
-                    KalmanState(cur.m + k * (e.value - cur.m),
-                      (1.0 - k) * pPred, k, e.tsUs)
-                  }
-                Some((key, e.tsUs, e.value, cur.m, cur.p, cur.k))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
+    valueScan[(Double, Double, Double),
+        (String, Long, Double, Double, Double, Double)](df, tsCol, seriesCols,
+        valueCol, stateTtl, s"kalman_level_$valueCol", s"kalman_var_$valueCol",
+        s"kalman_gain_$valueCol") { (key, prev, e) =>
+      val (m, p, k) = prev.fold((e.x, initP, 1.0)) { st =>
+        val (m0, v0, _) = st.s
+        val pPred = v0 + q
+        val k = pPred / (pPred + r)
+        (m0 + k * (e.x - m0), (1.0 - k) * pPred, k)
       }
-      .toDF("series", "tsUs", "value", "level", "variance", "gain")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("level").alias(s"kalman_level_$valueCol"),
-      col("variance").alias(s"kalman_var_$valueCol"),
-      col("gain").alias(s"kalman_gain_$valueCol")): _*)
+      (Some((m, p, k)), Some((key, e.tsUs, e.x, m, p, k)))
+    }
   }
-
-  case class RollMedState(recent: Seq[Double], lastTsUs: Long)
 
   /** Streaming rolling median over the trailing `window` observations per
     * series — bounded state (window−1 doubles per series), the streaming
     * twin of [[graft.tsdf.Stats.rollingMedian]] (same lower-median rank on
     * the same frame multiset, so bit-identical on the same data; asserted
-    * differentially). Rows inside a micro-batch process in event-time
-    * order; a row strictly older than the last processed timestamp is
-    * DROPPED (state cannot rewind — see [[ema]]). Optional `stateTtl`
-    * evicts idle series. */
+    * differentially). Late rows and `stateTtl` follow the [[seriesScan]]
+    * contract. */
   def rollingMedian(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, window: Int,
       stateTtl: Option[String] = None): DataFrame = {
     require(window >= 1, "window must be >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[RollMedState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var recent = state.getOption.map(_.recent.toVector).getOrElse(Vector.empty)
-            var lastTs = state.getOption.map(_.lastTsUs).getOrElse(Long.MinValue)
-            val outRows = sorted.flatMap { e =>
-              if (e.tsUs < lastTs) None
-              else {
-                val frame = (recent :+ e.value).takeRight(window)
-                val fs = frame.sorted
-                val med = fs(math.max(1, math.ceil(fs.size / 2.0).toInt) - 1)
-                recent = (recent :+ e.value).takeRight(window - 1)
-                lastTs = e.tsUs
-                Some((key, e.tsUs, e.value, med))
-              }
-            }
-            if (outRows.nonEmpty || state.exists) {
-              state.update(RollMedState(recent, lastTs))
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(lastTs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "med")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("med").alias(s"rolling_median_$valueCol")): _*)
+    valueScan[Seq[Double], (String, Long, Double, Double)](df, tsCol,
+        seriesCols, valueCol, stateTtl, s"rolling_median_$valueCol") {
+      (key, prev, e) =>
+        val recent = prev.fold(Vector.empty[Double])(_.s.toVector) :+ e.x
+        val fs = recent.takeRight(window).sorted
+        val med = fs(math.max(1, math.ceil(fs.size / 2.0).toInt) - 1)
+        (Some(recent.takeRight(window - 1)), Some((key, e.tsUs, e.x, med)))
+    }
   }
-
-  case class GapState(lastTsUs: Long)
 
   /** Streaming observation-gap detector: emits one row per inter-event hole
     * longer than `minGapSeconds`, per series — one long of state (the last
     * seen timestamp), the streaming twin of [[graft.tsdf.Stats.gaps]]
     * (asserted differentially). The gap row emits when the closing event
-    * arrives. A row strictly older than the last processed timestamp is
-    * DROPPED (state cannot rewind — see [[ema]]). Optional `stateTtl`
-    * evicts idle series — note an evicted
-    * series forgets its last timestamp, so a hole spanning the eviction is
-    * not reported (the TTL bounds both state and lookback by design). */
+    * arrives. Late rows and `stateTtl` follow the [[seriesScan]] contract
+    * — note an evicted series forgets its last timestamp, so a hole
+    * spanning the eviction is not reported (the TTL bounds both state and
+    * lookback by design). */
   def gaps(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       minGapSeconds: Long, stateTtl: Option[String] = None): DataFrame = {
     require(minGapSeconds >= 0, "minGapSeconds must be >= 0")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      lit(0.0).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
     val minGapUs = minGapSeconds * 1000000L
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[GapState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var last = state.getOption.map(_.lastTsUs)
-            val outRows = sorted.flatMap { e =>
-              // a row strictly older than the processed history is dropped:
-              // folding it in would rewind `last`, and the next on-time row
-              // could then report a gap that on-time history already closed
-              if (last.exists(e.tsUs < _)) None
-              else {
-                val gap = last.filter(l => e.tsUs - l > minGapUs)
-                  .map(l => (key, l, e.tsUs))
-                last = Some(e.tsUs)
-                gap
-              }
-            }
-            last.foreach { l =>
-              state.update(GapState(l))
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(l / 1000, state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "startUs", "endUs")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("startUs")).alias("gap_start"),
-      timestamp_micros(col("endUs")).alias("gap_end"),
-      ((col("endUs") - col("startUs")) / lit(1000000L)).alias("gap_seconds")): _*)
+    seriesScan[Double, Long, (String, Long, Long)](Seq(df), tsCol, seriesCols,
+        lit(0.0), stateTtl) { (key, last, e) =>
+      (Some(e.tsUs), last.filter(l => e.tsUs - l.s > minGapUs)
+        .map(l => (key, l.s, e.tsUs)))
+    }.toDF("series", "startUs", "endUs")
+      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
+        timestamp_micros(col("startUs")).alias("gap_start"),
+        timestamp_micros(col("endUs")).alias("gap_end"),
+        ((col("endUs") - col("startUs")) / lit(1000000L)).alias("gap_seconds")): _*)
   }
 
-  case class CusumEvent(series: String, tsUs: Long, value: Long)
-  case class CusumState(sumHi: Long, minHi: Long, sumLo: Long, minLo: Long,
-      lastTsUs: Long)
+  case class CusumState(sumHi: Long, minHi: Long, sumLo: Long, minLo: Long)
 
   /** Streaming Page's CUSUM control chart: the sequential drift detector
     * [[graft.tsdf.Stats.cusumControl]] as four longs of per-series state —
@@ -811,71 +499,29 @@ object StreamingTSDF {
     * reflection identity S_t = P_t − min(0, min_j P_j) turns into the
     * clamped CUSUM recursion with no recomputation. Exact integer
     * arithmetic end to end, so the stream is bit-identical to the batch
-    * window plan on the same data (asserted differentially). Rows inside
-    * a micro-batch process in event-time order; a row strictly older than
-    * the last processed timestamp is DROPPED (state cannot rewind — see
-    * [[ema]]). Optional `stateTtl` evicts idle series (an evicted series
+    * window plan on the same data (asserted differentially). Late rows and
+    * `stateTtl` follow the [[seriesScan]] contract (an evicted series
     * restarts its chart from zero — TTL bounds state by design). */
   def cusumControl(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, target: Long, slack: Long, threshold: Long,
       stateTtl: Option[String] = None): DataFrame = {
     require(slack >= 0, "slack must be >= 0")
     require(threshold > 0, "threshold must be > 0")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      graft.tsdf.Stats.integralOrFail(col(valueCol), "cusumControl")
-        .alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[CusumEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[CusumEvent], state: GroupState[CusumState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                val pHi = (if (cur == null) 0L else cur.sumHi) +
-                  (e.value - target - slack)
-                val pLo = (if (cur == null) 0L else cur.sumLo) +
-                  (target - slack - e.value)
-                val mHi = if (cur == null) pHi else math.min(cur.minHi, pHi)
-                val mLo = if (cur == null) pLo else math.min(cur.minLo, pLo)
-                cur = CusumState(pHi, mHi, pLo, mLo, e.tsUs)
-                val sHi = pHi - math.min(0L, mHi)
-                val sLo = pLo - math.min(0L, mLo)
-                Some((key, e.tsUs, e.value, sHi, sLo,
-                  sHi > threshold || sLo > threshold))
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "cusumHi", "cusumLo", "alert")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol),
-      col("cusumHi").alias("cusum_hi"),
-      col("cusumLo").alias("cusum_lo"),
-      col("alert")): _*)
+    val out = seriesScan[Long, CusumState,
+        (String, Long, Long, Long, Long, Boolean)](Seq(df), tsCol, seriesCols,
+        graft.tsdf.Stats.integralOrFail(col(valueCol), "cusumControl"),
+        stateTtl) { (key, prev, e) =>
+      val pHi = prev.fold(0L)(_.s.sumHi) + (e.x - target - slack)
+      val pLo = prev.fold(0L)(_.s.sumLo) + (target - slack - e.x)
+      val mHi = prev.fold(pHi)(p => math.min(p.s.minHi, pHi))
+      val mLo = prev.fold(pLo)(p => math.min(p.s.minLo, pLo))
+      val sHi = pHi - math.min(0L, mHi)
+      val sLo = pLo - math.min(0L, mLo)
+      (Some(CusumState(pHi, mHi, pLo, mLo)),
+        Some((key, e.tsUs, e.x, sHi, sLo, sHi > threshold || sLo > threshold)))
+    }
+    valueCols(out, df, tsCol, seriesCols, valueCol,
+      Seq("cusum_hi", "cusum_lo", "alert"))
   }
 
   /** Streaming VWAP: volume-weighted average price per tumbling event-time
@@ -942,6 +588,29 @@ object StreamingTSDF {
       .dropDuplicatesWithinWatermark("__fp")
       .drop("__fp")
 
+  // ------------------------------------------------ the partition fold
+  /** The stateless per-partition fold behind every additive delta feed:
+    * each (input partition, micro-batch) folds its rows into one
+    * accumulator per key with `add` and emits them in key order (so a
+    * retried task re-emits identical rows). No exchange, no sort, no state
+    * store, no cross-batch state — nothing is stored, nothing can leak.
+    * The sink's own fold (`sum` for counts and moments, `bit_or` for Bloom
+    * words, `max` for HLL registers) is associative and commutative, so it
+    * reconstructs the batch sketch exactly for any partitioning and any
+    * micro-batch split; a key may be emitted by several (partition, batch)
+    * pairs, so that fold is required. Sink traffic per batch is the number
+    * of distinct keys each partition touches, not the row count. */
+  private def partitionFold[E, K: Ordering, A, O: TypeTag](events: Dataset[E],
+      zero: => A)(key: E => K)(add: (A, E) => A)(emit: (K, A) => O): Dataset[O] =
+    events.mapPartitions { it =>
+      val acc = scala.collection.mutable.SortedMap.empty[K, A]
+      it.foreach { e =>
+        val k = key(e)
+        acc(k) = add(acc.getOrElse(k, zero), e)
+      }
+      acc.iterator.map { case (k, a) => emit(k, a) }
+    }(enc[O])
+
   // ------------------------------------------------ streaming HLL registers
   case class HllEvent(series: String, bucket: Long, rho: Int,
       eventTime: java.sql.Timestamp)
@@ -956,20 +625,15 @@ object StreamingTSDF {
     * from the shared [[graft.pipeline.Sketch.hllCells]] expressions, so
     * batch and stream sketches are bit-identical by construction.
     *
-    * Without `stateTtl` the emission is a stateless per-partition
-    * pre-aggregation (each (partition, batch) emits its own per-bucket
-    * max rho — max is idempotent and commutative, so the rollup is exact
-    * for any partitioning; no exchange, no state stores — the
-    * [[histogramDeltas]] discipline). With `stateTtl` the keyed stateful
-    * form runs instead: m ints of state per series, merge-free,
-    * watermark-evicted — eviction genuinely requires remembered state.
-    * Late rows are harmless either way (a register can only be raised,
-    * never needs rewinding). */
+    * Without `stateTtl` the emission is a [[partitionFold]] of per-bucket
+    * max rho (max is idempotent and commutative, so the rollup is exact
+    * for any partitioning). With `stateTtl` the keyed stateful form runs
+    * instead: m ints of state per series, merge-free, watermark-evicted —
+    * eviction genuinely requires remembered state. Late rows are harmless
+    * either way (a register can only be raised, never needs rewinding). */
   def hllRegisters(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       itemCol: Column, bucketBits: Int = 6, seed: Int = 29,
       stateTtl: Option[String] = None, wide: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val m = 1 << bucketBits
     // `wide` selects the ~60-bit CRT-pair family (cells from the SAME
     // shared hllCells expressions the batch builder uses, so batch and
@@ -983,30 +647,12 @@ object StreamingTSDF {
       bucket.alias("bucket"), rho.cast(IntegerType).alias("rho"),
       col(tsCol).alias("eventTime"))
       .filter(col("bucket").isNotNull) // null items carry no cell
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[HllEvent]
-    // Without a TTL the changelog needs NO cross-batch state for the
-    // rollup to be exact: the sink fold is max(register), and max is
-    // idempotent and commutative, so emitting each PARTITION's per-batch
-    // maxima (a stateless map-side combine — no exchange, no sort, no
-    // state stores) max-folds to the identical register file for any
-    // partitioning and any micro-batch split. The keyed stateful form
-    // below survives only for the TTL path, whose eviction semantics
-    // genuinely require remembered state.
-    val out = (if (stateTtl.isEmpty)
-      events.mapPartitions { it =>
-        val regs = scala.collection.mutable.SortedMap.empty[(String, Int), Int]
-        it.foreach { e =>
-          val k = (e.series, e.bucket.toInt)
-          val cur = regs.getOrElse(k, 0)
-          if (e.rho > cur) regs(k) = e.rho
-        }
-        regs.iterator.map { case ((s, b), r) => (s, b.toLong, r) }
-      }
-    else events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
+    val out = if (stateTtl.isEmpty)
+      partitionFold(projected.as(enc[HllEvent]), 0)(e => (e.series, e.bucket))(
+        (r, e) => math.max(r, e.rho)) { case ((s, b), r) => (s, b, r) }
+    else projected.withWatermark("eventTime", stateTtl.get).as(enc[HllEvent])
+      .groupByKey(_.series)(enc[String])
+      .flatMapGroupsWithState(OutputMode.Append(), timeoutFor(stateTtl)) {
         (key: String, rows: Iterator[HllEvent], state: GroupState[HllRegState]) =>
           if (state.hasTimedOut) {
             state.remove()
@@ -1021,14 +667,13 @@ object StreamingTSDF {
               maxTsMs = math.max(maxTsMs, e.eventTime.getTime)
             }
             state.update(HllRegState(regs))
-            stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-              math.max(maxTsMs, state.getCurrentWatermarkMs() + 1), ttl))
+            keepAlive(state, stateTtl, maxTsMs)
             changed.iterator.map(b => (key, b.toLong, regs(b)))
           }
-      })
-      .toDF("series", "bucket", "register")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      col("bucket"), col("register")): _*)
+      }(enc[HllRegState], enc[(String, Long, Int)])
+    out.toDF("series", "bucket", "register")
+      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
+        col("bucket"), col("register")): _*)
   }
 
   // ----------------------------------------------- streaming KMV k-min
@@ -1107,9 +752,6 @@ object StreamingTSDF {
   }
 
   // ----------------------------------------------- streaming histogram
-  case class HistEvent(series: String, bin: Long,
-      eventTime: java.sql.Timestamp)
-
   /** Streaming histogram-sketch feed: per micro-batch, the exact bin
     * counts of the batch's rows per series — COUNT DELTAS, so a plain
     * `sum(cnt) per (series, bin)` over the sink reconstructs the exact
@@ -1117,43 +759,21 @@ object StreamingTSDF {
     * are additive; the rollup at any point is the sketch so far, and
     * [[graft.pipeline.Sketch.histQuantiles]] reads quantiles from it).
     * Bins come from the shared [[graft.pipeline.Sketch.histBin]]
-    * expression, so batch and stream cannot drift. The operator carries
-    * NO cross-batch state (deltas need none) — it is a stateless
-    * per-partition pre-aggregation; nothing is stored, nothing can
-    * leak. */
+    * expression, so batch and stream cannot drift. Emitted by
+    * [[partitionFold]]. */
   def histogramDeltas(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: Column, lo: Double, hi: Double, nBins: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      graft.pipeline.Sketch.histBin(valueCol, lo, hi, nBins).alias("bin"),
-      col(tsCol).alias("eventTime"))
-      .filter(col("bin").isNotNull).as[HistEvent]
-    // Stateless per-PARTITION pre-aggregation (map-side combine), not a
-    // keyed stateful operator: deltas are additive, so per-partition
-    // per-batch counts fold to the identical grid for any partitioning
-    // and any micro-batch split — and the stream plan drops its only
-    // exchange, its sort and its state-store instances (commit cost per
-    // partition per micro-batch). Sorted emission keeps the output
-    // deterministic per input partition (task-retry safe).
-    val out = projected
-      .mapPartitions { it =>
-        val acc = scala.collection.mutable.SortedMap.empty[(String, Long), Long]
-        it.foreach { e =>
-          val k = (e.series, e.bin)
-          acc(k) = acc.getOrElse(k, 0L) + 1L
-        }
-        acc.iterator.map { case ((s, b), c) => (s, b, c) }
-      }
+    val events = df.select(seriesKey(seriesCols).alias("series"),
+        graft.pipeline.Sketch.histBin(valueCol, lo, hi, nBins).alias("bin"))
+      .filter(col("bin").isNotNull).as(enc[(String, Long)])
+    partitionFold(events, 0L)(e => e)((c, _) => c + 1L) {
+      case ((s, b), c) => (s, b, c) }
       .toDF("series", "bin", "cnt")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      col("bin"), col("cnt")): _*)
+      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
+        col("bin"), col("cnt")): _*)
   }
 
   // ----------------------------------------------- streaming count-min
-  case class CmsEvent(series: String, row: Long, bucket: Long)
-
   /** Streaming Count-Min feed: per micro-batch, the exact per-cell hit
     * counts of the batch's items per series — COUNT DELTAS, so a plain
     * `sum(cnt) per (series, row, bucket)` over the sink reconstructs the
@@ -1162,114 +782,64 @@ object StreamingTSDF {
     * [[graft.pipeline.Sketch.cmsEstimate]]. Addresses come from the shared
     * [[graft.pipeline.Sketch.cmsAddresses]] expressions (narrow or `wide`
     * CRT-pair family), so batch and stream cannot drift and the folded
-    * readout replays in the same SQL oracle as the batch sketch.
-    *
-    * Deltas are emitted per INPUT PARTITION per batch (a stateless
-    * map-side combine — the [[histogramDeltas]] discipline): additivity
-    * makes the fold exact for any partitioning, parallelism follows the
-    * ingest partitions, and the stream plan carries no exchange and no
-    * state stores. No cross-batch state is needed (deltas carry none).
-    * Null items carry no cells (same convention as [[hllRegisters]]). */
+    * readout replays in the same SQL oracle as the batch sketch. Emitted
+    * by [[partitionFold]]. Null items carry no cells (same convention as
+    * [[hllRegisters]]). */
   def cmsDeltas(df: DataFrame, seriesCols: Seq[String], itemCol: Column,
       width: Int, depth: Int, seed: Int = 53,
       wide: Boolean = false): DataFrame = {
     require(width >= 2 && depth >= 1, "need width >= 2, depth >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
+    val events = df.select(
       seriesKey(seriesCols).alias("series"),
       explode(graft.pipeline.Sketch.cmsAddresses(
         itemCol, width, depth, seed, wide)).alias("__a"))
       .select(col("series"), col("__a.row").alias("row"),
         col("__a.bucket").alias("bucket"))
       .filter(col("bucket").isNotNull)
-      .as[CmsEvent]
-    // Stateless per-PARTITION pre-aggregation (the histogramDeltas
-    // discipline): counter deltas are additive, so per-partition
-    // per-batch cell counts sum-fold to the identical CMS grid for any
-    // partitioning and any micro-batch split — no exchange, no sort, no
-    // state stores; parallelism comes from the input partitions instead
-    // of salt groups. Sorted emission keeps output deterministic per
-    // input partition (task-retry safe).
-    val out = projected
-      .mapPartitions { it =>
-        val acc =
-          scala.collection.mutable.SortedMap.empty[(String, Long, Long), Long]
-        it.foreach { e =>
-          val k = (e.series, e.row, e.bucket)
-          acc(k) = acc.getOrElse(k, 0L) + 1L
-        }
-        acc.iterator.map { case ((s, r, b), c) => (s, r, b, c) }
-      }
+      .as(enc[(String, Long, Long)])
+    partitionFold(events, 0L)(e => e)((c, _) => c + 1L) {
+      case ((s, r, b), c) => (s, r, b, c) }
       .toDF("series", "row", "bucket", "cnt")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      col("row"), col("bucket"), col("cnt")): _*)
+      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
+        col("row"), col("bucket"), col("cnt")): _*)
   }
 
   // ----------------------------------------------- streaming Bloom filter
-  case class BloomEvent(series: String, word: Long, mask: Long)
-
-  /** Streaming Bloom filter build: per series, the filter's set bits
-    * emitted as a CHANGELOG — each (input partition, micro-batch) emits,
-    * per 31-bit word, one row holding the OR of the masks it saw. Set
-    * bits are idempotent under OR, so `bit_or(mask) per (series, word)`
-    * over the sink reconstructs the batch
-    * [[graft.pipeline.Sketch.bloomBuild]] filter exactly, for any
-    * partitioning and any micro-batch split — probed with the unchanged
-    * batch [[graft.pipeline.Sketch.bloomProbe]], replayed by the same SQL
-    * oracle. Addresses come from the shared
+  /** Streaming Bloom filter build: per series, the filter's set bits —
+    * each (input partition, micro-batch) emits, per 31-bit word, one row
+    * holding the OR of the masks it saw ([[partitionFold]]). Set bits are
+    * idempotent under OR, so `bit_or(mask) per (series, word)` over the
+    * sink reconstructs the batch [[graft.pipeline.Sketch.bloomBuild]]
+    * filter exactly, for any partitioning and any micro-batch split —
+    * probed with the unchanged batch [[graft.pipeline.Sketch.bloomProbe]],
+    * replayed by the same SQL oracle. Addresses come from the shared
     * [[graft.pipeline.Sketch.bloomAddresses]] expressions (narrow or
-    * `wide`).
-    *
-    * The emission is a stateless per-partition pre-aggregation (the
-    * [[histogramDeltas]] discipline): no exchange, no sort, no state
-    * stores — the filter's footprint (≤ m/31 word rows per series per
-    * partition per batch) bounds both the in-flight map and the sink
-    * traffic. NOTE the fold is bitwise OR, not sum: a (series, word, bit)
-    * may be emitted by several (partition, batch) pairs (the stateful
-    * emit-once form this replaced allowed a sum fold; the folded filter
-    * is bit-identical either way). Null items carry no bits. */
+    * `wide`). The sink fold MUST be `bit_or`, not `sum`: a (series, word,
+    * bit) may be emitted by several (partition, batch) pairs. The
+    * filter's footprint (≤ m/31 word rows per series per partition per
+    * batch) bounds both the in-flight map and the sink traffic. Null items
+    * carry no bits. */
   def bloomBits(df: DataFrame, seriesCols: Seq[String], itemCol: Column,
       mBits: Int, depth: Int, seed: Int = 97,
       wide: Boolean = false): DataFrame = {
     require(mBits >= graft.pipeline.Sketch.BloomBitsPerWord && depth >= 1,
       s"need mBits >= 31, depth >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
+    val events = df.select(
       seriesKey(seriesCols).alias("series"),
       explode(graft.pipeline.Sketch.bloomAddresses(
         itemCol, mBits, depth, seed, wide)).alias("__a"))
       .select(col("series"), col("__a.word").alias("word"),
         col("__a.mask").alias("mask"))
       .filter(col("word").isNotNull)
-      .as[BloomEvent]
-    // Stateless per-PARTITION pre-aggregation (the histogramDeltas
-    // discipline): each partition emits, per (series, word), the OR of
-    // the masks it saw in the batch. Set bits are idempotent under OR,
-    // so a `bit_or(mask) per (series, word)` fold over the sink IS the
-    // filter for any partitioning and any micro-batch split — no
-    // exchange, no sort, no state stores. NOTE the fold is bitwise OR,
-    // not sum: a (series, word, bit) may now be emitted by several
-    // (partition, batch) pairs, so the old emit-once/sum contract no
-    // longer holds (the filter itself is unchanged bit-for-bit).
-    val out = projected
-      .mapPartitions { it =>
-        val words = scala.collection.mutable.SortedMap.empty[(String, Long), Long]
-        it.foreach { e =>
-          val k = (e.series, e.word)
-          words(k) = words.getOrElse(k, 0L) | e.mask
-        }
-        words.iterator.map { case ((s, w), m) => (s, w, m) }
-      }
+      .as(enc[(String, Long, Long)])
+    partitionFold(events, 0L)(e => (e._1, e._2))((m, e) => m | e._3) {
+      case ((s, w), m) => (s, w, m) }
       .toDF("series", "word", "mask")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      col("word"), col("mask")): _*)
+      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
+        col("word"), col("mask")): _*)
   }
 
   // ----------------------------------------------- streaming keyed sums
-  case class SumEvent(series: String, key: Long, v: Long)
-
   /** Streaming keyed-sum feed: per micro-batch, the exact integer SUM
     * DELTAS of `valueCol` per (series, key) — sums are additive, so a
     * plain `sum(s) per (series, key)` over the sink reconstructs the
@@ -1278,81 +848,91 @@ object StreamingTSDF {
     * maintenance on a stream: any downstream shape built from grouped
     * integer sums (hour-of-day profiles for DTW, per-bucket masses,
     * count grids via `valueCol = 1`) folds from the sink without
-    * rescanning history. No cross-batch state is carried (deltas need
-    * none — the emission is a stateless per-partition pre-aggregation,
-    * the [[histogramDeltas]] discipline); sink traffic per batch is the
-    * number of DISTINCT (series, key) cells touched per partition, not
-    * the row count. Null keys and null values carry nothing. */
+    * rescanning history. Emitted by [[partitionFold]]. Null keys and null
+    * values carry nothing. */
   def sumDeltas(df: DataFrame, seriesCols: Seq[String], keyCol: Column,
       valueCol: Column): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
+    val events = df.select(
       seriesKey(seriesCols).alias("series"),
       keyCol.cast(LongType).alias("key"),
       valueCol.cast(LongType).alias("v"))
       .filter(col("key").isNotNull && col("v").isNotNull)
-      .as[SumEvent]
-    // Stateless per-PARTITION pre-aggregation (the histogramDeltas
-    // discipline): sums are additive, so per-partition per-batch deltas
-    // fold identically for any partitioning and any micro-batch split.
-    val out = projected
-      .mapPartitions { it =>
-        val acc = scala.collection.mutable.SortedMap.empty[(String, Long), Long]
-        it.foreach { e =>
-          val k = (e.series, e.key)
-          acc(k) = acc.getOrElse(k, 0L) + e.v
-        }
-        acc.iterator.map { case ((s, k), v) => (s, k, v) }
-      }
+      .as(enc[(String, Long, Long)])
+    partitionFold(events, 0L)(e => (e._1, e._2))((a, e) => a + e._3) {
+      case ((s, k), v) => (s, k, v) }
       .toDF("series", "key", "s")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      col("key"), col("s")): _*)
+      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
+        col("key"), col("s")): _*)
   }
 
   // ------------------------------------------- streaming survival grid
-  case class KmEvent(series: String, t: Long, ev: Boolean)
-
   /** Additive Kaplan–Meier grid deltas: per micro-batch, per (series,
     * duration t), the event count Δd and total observation count Δobs —
     * both plain sums, so the folded sink equals the batch (group, t)
     * grid for ANY micro-batching, and
     * [[graft.pipeline.Analytics.kaplanMeierFromGrid]] lands on the
     * identical curve (risk sets and the survival fold are pure
-    * functions OF THE GRID). Same contract class as [[sumDeltas]]:
-    * stateless per batch, sink traffic = touched (series, t) cells. */
+    * functions OF THE GRID). Same contract class as [[sumDeltas]]. */
   def kmDeltas(df: DataFrame, seriesCols: Seq[String],
       durationCol: Column, eventCol: Column): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
+    val events = df.select(
       seriesKey(seriesCols).alias("series"),
       durationCol.cast(LongType).alias("t"),
       eventCol.alias("ev"))
       .filter(col("t").isNotNull && col("ev").isNotNull)
-      .as[KmEvent]
-    // Stateless per-PARTITION pre-aggregation (the histogramDeltas
-    // discipline): grid cells are additive, so per-partition per-batch
-    // deltas fold identically for any partitioning and micro-batching.
-    val out = projected
-      .mapPartitions { it =>
-        val acc =
-          scala.collection.mutable.SortedMap.empty[(String, Long), (Long, Long)]
-        it.foreach { e =>
-          val k = (e.series, e.t)
-          val (d, o) = acc.getOrElse(k, (0L, 0L))
-          acc(k) = (d + (if (e.ev) 1L else 0L), o + 1L)
-        }
-        acc.iterator.map { case ((s, t), (d, o)) => (s, t, d, o) }
-      }
+      .as(enc[(String, Long, Boolean)])
+    partitionFold(events, (0L, 0L))(e => (e._1, e._2)) {
+      case ((d, o), e) => (d + (if (e._3) 1L else 0L), o + 1L) } {
+      case ((s, t), (d, o)) => (s, t, d, o) }
       .toDF("series", "t", "d", "obs")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      col("t"), col("d"), col("obs")): _*)
+      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
+        col("t"), col("d"), col("obs")): _*)
   }
 
   // --------------------------------------------- streaming novelty gate
-  case class NoveltyFp(fp: Long, doc: Long)
-  case class NoveltyFpT(fp: Long, doc: Long, eventTime: java.sql.Timestamp)
+  case class Owned[K](key: K, doc: Long, eventTime: java.sql.Timestamp)
+  case class MediaKey(modality: String, fp: String, nUnits: Long)
+
+  /** The first-owner gate behind [[noveltyOwnership]] and
+    * [[fingerprintOwnership]], generic in the group key: state per key is
+    * ONE long, its first owner's id — first ARRIVAL wins, ties within a
+    * micro-batch break to the minimum id — and each distinct (key, doc) of
+    * a batch is emitted once through `out` with its `novel` flag
+    * (doc == owner). `rows` carries (key, doc, eventTime).
+    *
+    * Without `stateTtl` ownership is remembered FOREVER (NoTimeout) —
+    * state grows with the distinct-key universe, the correct gate for a
+    * bounded corpus build. With it, rows are watermarked by the TTL on
+    * `eventTime` and a key's ownership is evicted once the watermark
+    * passes its LAST sighting by the TTL — the corpus-rotation horizon —
+    * after which the next arrival re-claims it as novel (the answer a
+    * batch re-run over the retained window would give). Total state is
+    * then bounded by the keys ACTIVE within one TTL horizon. */
+  private def firstOwner[K: TypeTag, O: TypeTag](rows: DataFrame,
+      stateTtl: Option[String])(out: (K, Long, Boolean) => O): Dataset[O] =
+    stateTtl.fold(rows)(ttl => rows.withWatermark("eventTime", ttl))
+      .as(enc[Owned[K]]).groupByKey(_.key)(enc[K])
+      .flatMapGroupsWithState(OutputMode.Append(), timeoutFor(stateTtl)) {
+        (key: K, it: Iterator[Owned[K]], state: GroupState[Long]) =>
+          if (state.hasTimedOut) {
+            state.remove() // ownership forgotten past the rotation horizon
+            Iterator.empty
+          } else {
+            val batch = it.toArray
+            val docs = batch.map(_.doc).toSet
+            if (docs.isEmpty) Iterator.empty
+            else {
+              val owner =
+                if (state.exists) state.get
+                else { val m = docs.min; state.update(m); m }
+              keepAlive(state, stateTtl, batch.map(_.eventTime.getTime).max)
+              docs.iterator.map(d => out(key, d, d == owner))
+            }
+          }
+      }(enc[Long], enc[O])
+
+  private def ownerTime(eventTimeCol: Option[String]): Column =
+    eventTimeCol.fold(lit(null).cast(TimestampType))(col).alias("eventTime")
 
   /** Ingest-time first-occurrence novelty gate — the streaming face of
     * [[graft.pipeline.TextAnalysis.winnowNovelty]], the dedup-priority
@@ -1362,14 +942,14 @@ object StreamingTSDF {
     * fingerprint first). The per-doc score is then a stateless fold over
     * the sink — `n_novel / n_fps` per doc, exactly the batch formula.
     *
-    * Ownership semantics: first ARRIVAL wins; within a micro-batch ties
-    * break to the minimum id. Batch winnowNovelty's min-id "first owner"
-    * is its ingestion-order proxy, so stream == batch EXACTLY whenever
-    * ingestion order is nondecreasing in id (any batching, any order
-    * WITHIN a batch) — the single-micro-batch AvailableNow harness and
-    * the id-ordered multi-batch differential both sit inside that
-    * contract. A smaller id arriving after its fingerprint was claimed
-    * scores as non-novel — the honest ingest-time answer.
+    * Ownership semantics ([[firstOwner]]): first ARRIVAL wins; within a
+    * micro-batch ties break to the minimum id. Batch winnowNovelty's
+    * min-id "first owner" is its ingestion-order proxy, so stream == batch
+    * EXACTLY whenever ingestion order is nondecreasing in id (any
+    * batching, any order WITHIN a batch) — the single-micro-batch
+    * AvailableNow harness and the id-ordered multi-batch differential both
+    * sit inside that contract. A smaller id arriving after its fingerprint
+    * was claimed scores as non-novel — the honest ingest-time answer.
     *
     * Scale shape: the winnow selection is the same stateless scan-local
     * expression as the batch operator (no pair face, no all-pairs);
@@ -1380,87 +960,25 @@ object StreamingTSDF {
     * frequency within the batch (the bounded-by-semantics per-group
     * contract class). Ids must be castable to long.
     *
-    * State lifecycle: with the defaults, ownership is remembered FOREVER
-    * (NoTimeout) — state grows with the distinct-fingerprint universe,
-    * the correct gate for a bounded corpus build. For unbounded rolling
-    * ingestion pass `stateTtl` + `eventTimeCol` (the [[asofJoin]]
-    * convention): a fingerprint's ownership is evicted once the
-    * event-time watermark passes its LAST sighting by the TTL — the
-    * corpus-rotation horizon — after which the next arrival re-claims it
-    * as novel (the answer a batch re-run over the retained window would
-    * give). Total state is then bounded by the fingerprints ACTIVE
-    * within one TTL horizon instead of all fingerprints ever seen. */
+    * State lifecycle: [[firstOwner]]'s — remembered forever by default;
+    * for unbounded rolling ingestion pass `stateTtl` + `eventTimeCol` (the
+    * [[asofJoin]] convention) to evict a fingerprint's ownership past the
+    * corpus-rotation horizon. */
   def noveltyOwnership(df: DataFrame, textCol: String, idCol: String,
       k: Int = 5, w: Int = 4, stateTtl: Option[String] = None,
       eventTimeCol: Option[String] = None): DataFrame = {
     require(stateTtl.isDefined == eventTimeCol.isDefined,
       "stateTtl and eventTimeCol come together (event-time TTL eviction)")
-    val spark = df.sparkSession
-    import spark.implicits._
-    if (stateTtl.isEmpty) {
-      val fps = graft.pipeline.TextAnalysis.winnowFingerprints(
-          df, textCol, idCol, k, w)
-        .select(col("fp"), col(idCol).cast(LongType).alias("doc"))
-        .as[NoveltyFp]
-      fps.groupByKey(_.fp)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.NoTimeout()) {
-          (fp: Long, rows: Iterator[NoveltyFp], state: GroupState[Long]) =>
-            val docs = rows.map(_.doc).toSet
-            if (docs.isEmpty) Iterator.empty
-            else {
-              val owner =
-                if (state.exists) state.get
-                else { val m = docs.min; state.update(m); m }
-              docs.iterator.map(d => (d, fp, d == owner))
-            }
-        }
-        .toDF(idCol, "fp", "novel")
-    } else {
-      val ttl = stateTtl.get
-      val fps = graft.pipeline.TextAnalysis.winnowFingerprints(
-          df, textCol, idCol, k, w, carryCols = Seq(eventTimeCol.get))
-        .select(col("fp"), col(idCol).cast(LongType).alias("doc"),
-          col(eventTimeCol.get).alias("eventTime"))
-        .withWatermark("eventTime", ttl)
-        .as[NoveltyFpT]
-      fps.groupByKey(_.fp)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.EventTimeTimeout()) {
-          (fp: Long, rows: Iterator[NoveltyFpT], state: GroupState[Long]) =>
-            if (state.hasTimedOut) {
-              state.remove() // ownership forgotten past the rotation horizon
-              Iterator.empty
-            } else {
-              val batch = rows.toArray
-              if (batch.isEmpty) Iterator.empty
-              else {
-                val docs = batch.map(_.doc).toSet
-                val owner =
-                  if (state.exists) state.get
-                  else { val m = docs.min; state.update(m); m }
-                // keep-alive: eviction clock restarts at the fp's LAST
-                // sighting (floor-clamped above the current watermark,
-                // the asofJoin convention)
-                val lastMs = batch.map(_.eventTime.getTime).max
-                state.setTimeoutTimestamp(
-                  math.max(lastMs, state.getCurrentWatermarkMs() + 1), ttl)
-                docs.iterator.map(d => (d, fp, d == owner))
-              }
-            }
-        }
-        .toDF(idCol, "fp", "novel")
-    }
+    val fps = graft.pipeline.TextAnalysis.winnowFingerprints(
+      df, textCol, idCol, k, w, carryCols = eventTimeCol.toSeq)
+    firstOwner[Long, (Long, Long, Boolean)](fps.select(col("fp").alias("key"),
+        col(idCol).cast(LongType).alias("doc"), ownerTime(eventTimeCol)),
+        stateTtl)((fp, d, novel) => (d, fp, novel))
+      .toDF(idCol, "fp", "novel")
   }
 
-  case class MediaFpRow(modality: String, fp: String, nUnits: Long,
-      doc: Long)
-  case class MediaFpRowT(modality: String, fp: String, nUnits: Long,
-      doc: Long, eventTime: java.sql.Timestamp)
-
   /** First-owner gate over ARBITRARY content fingerprints —
-    * [[noveltyOwnership]]'s state discipline (one owner per distinct
-    * key, first-arrival-wins, min-id within a micro-batch) generalized
+    * [[noveltyOwnership]]'s state discipline ([[firstOwner]]) generalized
     * from winnow fingerprints to any (modality, fp, n_units, id) frame,
     * e.g. [[graft.pipeline.Multimodal.mediaFingerprints]] on an
     * arriving payload stream: the decode + fingerprint are stateless
@@ -1468,84 +986,20 @@ object StreamingTSDF {
     * the only shuffle carries fingerprint rows — payload bytes never
     * cross an exchange. Same id-ordered-ingestion equivalence contract
     * as [[noveltyOwnership]]; output (modality, fp, n_units, idCol,
-    * novel).
-    *
-    * State lifecycle: with the defaults ownership is remembered FOREVER
-    * (NoTimeout) — state grows with the distinct-content universe, the
-    * correct gate for a bounded corpus build. For unbounded rolling
-    * media ingestion pass `stateTtl` + `eventTimeCol` (a column of
-    * `fps`, carried through the decode map via
-    * [[graft.pipeline.Multimodal.mediaFingerprints]]'s carryCols): a
-    * group's ownership is evicted once the event-time watermark passes
-    * its LAST sighting by the TTL — the corpus-rotation horizon — after
-    * which the next arrival re-claims it as novel. Total state is then
-    * bounded by the content groups ACTIVE within one TTL horizon
-    * instead of all groups ever seen ([[noveltyOwnership]]'s TTL arm,
-    * generalized). */
+    * novel). For unbounded rolling media ingestion pass `stateTtl` +
+    * `eventTimeCol` (a column of `fps`, carried through the decode map via
+    * [[graft.pipeline.Multimodal.mediaFingerprints]]'s carryCols). */
   def fingerprintOwnership(fps: DataFrame, idCol: String,
       stateTtl: Option[String] = None,
       eventTimeCol: Option[String] = None): DataFrame = {
     require(stateTtl.isDefined == eventTimeCol.isDefined,
       "stateTtl and eventTimeCol come together (event-time TTL eviction)")
-    val spark = fps.sparkSession
-    import spark.implicits._
-    if (stateTtl.isEmpty) {
-      fps.select(col("modality"), col("fp"),
-          col("n_units").alias("nUnits"),
-          col(idCol).cast(LongType).alias("doc"))
-        .as[MediaFpRow]
-        .groupByKey(r => (r.modality, r.fp, r.nUnits))
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.NoTimeout()) {
-          (key: (String, String, Long), rows: Iterator[MediaFpRow],
-              state: GroupState[Long]) =>
-            val docs = rows.map(_.doc).toSet
-            if (docs.isEmpty) Iterator.empty
-            else {
-              val owner =
-                if (state.exists) state.get
-                else { val m = docs.min; state.update(m); m }
-              docs.iterator.map(d => (key._1, key._2, key._3, d, d == owner))
-            }
-        }
-        .toDF("modality", "fp", "n_units", idCol, "novel")
-    } else {
-      val ttl = stateTtl.get
-      fps.select(col("modality"), col("fp"),
-          col("n_units").alias("nUnits"),
-          col(idCol).cast(LongType).alias("doc"),
-          col(eventTimeCol.get).alias("eventTime"))
-        .withWatermark("eventTime", ttl)
-        .as[MediaFpRowT]
-        .groupByKey(r => (r.modality, r.fp, r.nUnits))
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.EventTimeTimeout()) {
-          (key: (String, String, Long), rows: Iterator[MediaFpRowT],
-              state: GroupState[Long]) =>
-            if (state.hasTimedOut) {
-              state.remove() // ownership forgotten past the rotation horizon
-              Iterator.empty
-            } else {
-              val batch = rows.toArray
-              if (batch.isEmpty) Iterator.empty
-              else {
-                val docs = batch.map(_.doc).toSet
-                val owner =
-                  if (state.exists) state.get
-                  else { val m = docs.min; state.update(m); m }
-                // keep-alive: eviction clock restarts at the group's LAST
-                // sighting (floor-clamped above the current watermark,
-                // the noveltyOwnership convention)
-                val lastMs = batch.map(_.eventTime.getTime).max
-                state.setTimeoutTimestamp(
-                  math.max(lastMs, state.getCurrentWatermarkMs() + 1), ttl)
-                docs.iterator.map(d =>
-                  (key._1, key._2, key._3, d, d == owner))
-              }
-            }
-        }
-        .toDF("modality", "fp", "n_units", idCol, "novel")
-    }
+    firstOwner[MediaKey, (String, String, Long, Long, Boolean)](fps.select(
+        struct(col("modality"), col("fp"), col("n_units").alias("nUnits"))
+          .alias("key"),
+        col(idCol).cast(LongType).alias("doc"), ownerTime(eventTimeCol)),
+        stateTtl)((g, d, novel) => (g.modality, g.fp, g.nUnits, d, novel))
+      .toDF("modality", "fp", "n_units", idCol, "novel")
   }
 
   /** The batch-formula rollup over a [[noveltyOwnership]] sink: per-doc
@@ -1561,124 +1015,75 @@ object StreamingTSDF {
       col("n_novel").cast(DoubleType) / col("n_fps").cast(DoubleType))
 
   // ---------------------------------------------- streaming stat moments
-  case class StatEvent(series: String, y: Long)
-
   /** Streaming (n, Σy, Σy²) feed: per micro-batch, the exact integer
     * first/second-moment DELTAS of `valueCol` per series — additive, so
     * a plain fold over the sink reconstructs the batch moment table for
     * any micro-batch split. These three numbers are the sufficient
     * statistics behind mean/variance/z-scores and Welch's t-test
     * ([[graft.pipeline.Drift.welchTTest]]'s per-cohort state), so any
-    * of those refit from the fold with no history rescan. No
-    * cross-batch state; one output row per (series, batch). */
+    * of those refit from the fold with no history rescan. Emitted by
+    * [[partitionFold]]. */
   def statsDeltas(df: DataFrame, seriesCols: Seq[String],
       valueCol: Column): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
+    val events = df.select(
       seriesKey(seriesCols).alias("series"),
       valueCol.cast(LongType).alias("y"))
       .filter(col("y").isNotNull)
-      .as[StatEvent]
-    // Stateless per-PARTITION pre-aggregation (the histogramDeltas
-    // discipline): moments are additive, so per-partition per-batch
-    // deltas fold identically for any partitioning and micro-batching.
-    val out = projected
-      .mapPartitions { it =>
-        val acc =
-          scala.collection.mutable.SortedMap.empty[String, (Long, Long, Long)]
-        it.foreach { e =>
-          val (n, s1, s2) = acc.getOrElse(e.series, (0L, 0L, 0L))
-          acc(e.series) = (n + 1, s1 + e.y, s2 + e.y * e.y)
-        }
-        acc.iterator.map { case (k, (n, s1, s2)) => (k, n, s1, s2) }
-      }
+      .as(enc[(String, Long)])
+    partitionFold(events, (0L, 0L, 0L))(_._1) {
+      case ((n, s1, s2), (_, y)) => (n + 1, s1 + y, s2 + y * y) } {
+      case (k, (n, s1, s2)) => (k, n, s1, s2) }
       .toDF("series", "n", "s1", "s2")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      col("n"), col("s1"), col("s2")): _*)
+      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
+        col("n"), col("s1"), col("s2")): _*)
   }
 
   // ---------------------------------------------- streaming OLS moments
-  case class OlsEvent(series: String, x1: Long, x2: Long, y: Long)
-
   /** Streaming OLS-moment feed: per micro-batch, the nine exact integer
     * moment DELTAS per series that [[graft.pipeline.Regression]] fits
     * from — moments are additive, so `sum` per series over the sink
     * reconstructs the exact batch moment table for any micro-batch
     * split, and [[graft.pipeline.Regression.olsFromMoments]] turns the
     * fold into the identical bit-exact βs (incremental model refit with
-    * no history rescan). No cross-batch state (deltas need none); one
-    * output row per (series, batch). */
+    * no history rescan). Emitted by [[partitionFold]]. */
   def olsMomentDeltas(df: DataFrame, seriesCols: Seq[String], x1: Column,
       x2: Column, y: Column): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
+    val events = df.select(
       seriesKey(seriesCols).alias("series"),
       x1.cast(LongType).alias("x1"), x2.cast(LongType).alias("x2"),
       y.cast(LongType).alias("y"))
       .filter(col("x1").isNotNull && col("x2").isNotNull &&
         col("y").isNotNull)
-      .as[OlsEvent]
-    // Stateless per-PARTITION pre-aggregation (the histogramDeltas
-    // discipline): moments are additive, so per-partition per-batch
-    // deltas fold identically for any partitioning and micro-batching.
-    val out = projected
-      .mapPartitions { it =>
-        val acc = scala.collection.mutable.SortedMap.empty[String, Array[Long]]
-        it.foreach { e =>
-          val a = acc.getOrElseUpdate(e.series, new Array[Long](9))
-          a(0) += 1; a(1) += e.x1; a(2) += e.x2; a(3) += e.y
-          a(4) += e.x1 * e.x1; a(5) += e.x1 * e.x2; a(6) += e.x2 * e.x2
-          a(7) += e.x1 * e.y; a(8) += e.x2 * e.y
-        }
-        acc.iterator.map { case (k, a) =>
-          (k, a(0), a(1), a(2), a(3), a(4), a(5), a(6), a(7), a(8))
-        }
-      }
+      .as(enc[(String, Long, Long, Long)])
+    partitionFold(events, new Array[Long](9))(_._1) {
+      case (a, (_, x1, x2, y)) =>
+        a(0) += 1; a(1) += x1; a(2) += x2; a(3) += y
+        a(4) += x1 * x1; a(5) += x1 * x2; a(6) += x2 * x2
+        a(7) += x1 * y; a(8) += x2 * y
+        a } { (k, a) => (k, a(0), a(1), a(2), a(3), a(4), a(5), a(6), a(7), a(8)) }
       .toDF("series", "n", "sx1", "sx2", "sy", "sx11", "sx12", "sx22",
         "sx1y", "sx2y")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      col("n"), col("sx1"), col("sx2"), col("sy"), col("sx11"),
-      col("sx12"), col("sx22"), col("sx1y"), col("sx2y")): _*)
+      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
+        col("n"), col("sx1"), col("sx2"), col("sy"), col("sx11"),
+        col("sx12"), col("sx22"), col("sx1y"), col("sx2y")): _*)
   }
 
   // ---------------------------------------------- streaming pair counts
-  case class PairEvent(w1: String, w2: String)
-
   /** Streaming pair-count feed: per micro-batch, the exact COUNT DELTAS
     * per (w1, w2) string pair — counts are additive, so `sum(cnt) per
     * (w1, w2)` over the sink reconstructs the exact batch pair grid of
     * everything ingested, for any micro-batch split (pairs are generated
     * WITHIN arriving rows — e.g. a document's bigrams — so no pair can
     * straddle a batch boundary and no cross-batch state is needed).
-    * Deltas are emitted per INPUT PARTITION per batch (a stateless
-    * map-side combine — the [[histogramDeltas]] discipline): no
-    * exchange, no sort, no state stores. Sink traffic per batch =
-    * distinct pairs touched per partition, not occurrences. */
+    * Emitted by [[partitionFold]]. */
   def pairCountDeltas(df: DataFrame, aCol: Column,
       bCol: Column): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
+    val events = df.select(
       aCol.cast(StringType).alias("w1"), bCol.cast(StringType).alias("w2"))
       .filter(col("w1").isNotNull && col("w2").isNotNull)
-      .as[PairEvent]
-    // Stateless per-PARTITION pre-aggregation (the histogramDeltas
-    // discipline): count deltas are additive, so per-partition per-batch
-    // pair counts sum-fold to the identical grid for any partitioning and
-    // any micro-batch split — no exchange, no sort, no state stores;
-    // parallelism comes from the input partitions instead of salt groups.
-    projected
-      .mapPartitions { it =>
-        val acc =
-          scala.collection.mutable.SortedMap.empty[(String, String), Long]
-        it.foreach { e =>
-          val k = (e.w1, e.w2)
-          acc(k) = acc.getOrElse(k, 0L) + 1L
-        }
-        acc.iterator.map { case ((a, b), c) => (a, b, c) }
-      }
+      .as(enc[(String, String)])
+    partitionFold(events, 0L)(e => e)((c, _) => c + 1L) {
+      case ((a, b), c) => (a, b, c) }
       .toDF("w1", "w2", "cnt")
   }
 
@@ -1747,8 +1152,8 @@ object StreamingTSDF {
   }
 
   // ----------------------------------------------- streaming pattern DFA
-  case class DfaEvent(series: String, tsUs: Long, tie: Long, sym: String)
-  case class DfaState(state: Int, lastTsUs: Long, lastTie: Long)
+  private def tieOf(tieCol: String): Column =
+    if (tieCol.isEmpty) lit(0L) else col(tieCol).cast(LongType)
 
   /** Streaming CEP: run a caller-supplied DFA over each series' event
     * symbols in (ts, tie) order and emit per-micro-batch DELTAS of
@@ -1766,18 +1171,16 @@ object StreamingTSDF {
     * DFA is the standard candidate-set construction of a regex; supply a
     * reluctant-quantifier pattern to the batch twin/oracle (the
     * q_stream_seq_pattern differential pins DFA == lazy-regex counting on
-    * random traces). Unmapped events become `defaultSym`. Late rows
-    * (behind the series high-water mark) are dropped, the
-    * [[scd2Changelog]] convention; within a batch rows are sorted by
-    * (ts, tie). */
+    * random traces). Unmapped events become `defaultSym`. Late rows follow
+    * the [[seriesScan]] contract with (ts, tie) as the total order. */
   def patternDfa(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       eventCol: String, alphabet: Map[String, String],
       transitions: Map[(Int, String), (Int, Boolean)],
       defaultSym: String = "o", tieCol: String = ""): DataFrame = {
     require(transitions.nonEmpty, "need a transition table")
     // Totality is validated HERE, on the driver, before the stream starts:
-    // an unmapped (state, symbol) discovered inside flatMapGroupsWithState
-    // would kill the query mid-flight at runtime instead of failing fast.
+    // an unmapped (state, symbol) discovered inside the scan would kill the
+    // query mid-flight at runtime instead of failing fast.
     // Every symbol an event can render to is alphabet.values ++ defaultSym;
     // every reachable state is 0 plus the transition targets.
     locally {
@@ -1790,52 +1193,25 @@ object StreamingTSDF {
         s"transition table not total over reachable states x symbols; " +
           s"missing: ${missing.toSeq.sorted.take(8).mkString(", ")}")
     }
-    val spark = df.sparkSession
-    import spark.implicits._
     val symOf = alphabet.toSeq.sortBy(_._1)
       .foldRight(lit(defaultSym): Column) { case ((k, v), acc) =>
         when(col(eventCol) === k, lit(v)).otherwise(acc)
       }
-    val tie = if (tieCol.isEmpty) lit(0L) else col(tieCol).cast(LongType)
-    val events = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"), tie.alias("tie"),
-      symOf.alias("sym")).as[DfaEvent]
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[DfaEvent], state: GroupState[DfaState]) =>
-          val sorted = rows.toSeq.sortBy(e => (e.tsUs, e.tie))
-          var st = state.getOption.getOrElse(DfaState(0, Long.MinValue, Long.MinValue))
-          var consumed = 0L
-          var matches = 0L
-          sorted.foreach { e =>
-            val late = e.tsUs < st.lastTsUs ||
-              (e.tsUs == st.lastTsUs && e.tie <= st.lastTie)
-            if (!late) {
-              val (next, hit) = transitions.getOrElse((st.state, e.sym),
-                sys.error(s"transition table not total: state ${st.state} " +
-                  s"symbol '${e.sym}'"))
-              st = DfaState(next, e.tsUs, e.tie)
-              consumed += 1
-              if (hit) matches += 1
-            }
-          }
-          state.update(st)
-          if (consumed > 0 || matches > 0)
-            Iterator.single((key, consumed, matches))
-          else Iterator.empty
-      }
-      .toDF("series", "trace_len", "n_matches")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      col("trace_len"), col("n_matches")): _*)
+    // one (series, 1, hit) row per consumed event, summed per batch
+    seriesScan[String, Int, (String, Long, Long)](Seq(df), tsCol, seriesCols,
+        symOf, None, tie = Some(tieOf(tieCol)),
+        perBatch = rows => rows.headOption.iterator.map(r =>
+          (r._1, rows.size.toLong, rows.map(_._3).sum))) { (key, prev, e) =>
+      val state = prev.fold(0)(_.s)
+      val (next, hit) = transitions.getOrElse((state, e.x),
+        sys.error(s"transition table not total: state $state symbol '${e.x}'"))
+      (Some(next), Some((key, 1L, if (hit) 1L else 0L)))
+    }.toDF("series", "trace_len", "n_matches")
+      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
+        col("trace_len"), col("n_matches")): _*)
   }
 
   // -------------------------------------------- streaming transition steps
-  case class StepEvent(series: String, tsUs: Long, tie: Long, typ: String)
-  case class StepState(lastTsUs: Long, lastTie: Long, lastType: String)
-
   /** Streaming Markov transition feed: per micro-batch, the exact COUNT
     * DELTAS of adjacent (from → to) event-type steps per series in
     * (ts, tie) order — including the step that straddles the batch
@@ -1844,58 +1220,25 @@ object StreamingTSDF {
     * the exact batch [[graft.pipeline.Analytics.transitionMatrix]] counts
     * of everything ingested (adjacency is local, so counts are additive
     * once the boundary step is owned by the arriving batch). State is
-    * ONE (ts, tie, type) triple per series; late rows (at or behind the
-    * series high-water mark) drop — the [[scd2Changelog]] convention;
-    * within a batch rows sort by (ts, tie). */
+    * ONE event type per series; late rows follow the [[seriesScan]]
+    * contract with (ts, tie) as the total order. */
   def transitionDeltas(df: DataFrame, tsCol: String, seriesCols: Seq[String],
-      typeCol: String, tieCol: String = ""): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val tie = if (tieCol.isEmpty) lit(0L) else col(tieCol).cast(LongType)
-    val events = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"), tie.alias("tie"),
-      col(typeCol).cast(StringType).alias("typ")).as[StepEvent]
-    events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[StepEvent],
-            state: GroupState[StepState]) =>
-          val sorted = rows.toSeq.sortBy(e => (e.tsUs, e.tie))
-          var st = state.getOption
-            .getOrElse(StepState(Long.MinValue, Long.MinValue, null))
-          val acc = scala.collection.mutable.SortedMap
-            .empty[(String, String), Long]
-          sorted.foreach { e =>
-            val late = e.tsUs < st.lastTsUs ||
-              (e.tsUs == st.lastTsUs && e.tie <= st.lastTie)
-            if (!late) {
-              if (st.lastType != null) {
-                val k = (st.lastType, e.typ)
-                acc(k) = acc.getOrElse(k, 0L) + 1L
-              }
-              st = StepState(e.tsUs, e.tie, e.typ)
-            }
-          }
-          state.update(st)
-          acc.iterator.map { case ((f, t), n) => (f, t, n) }
-      }
-      .toDF("from_type", "to_type", "n")
-  }
+      typeCol: String, tieCol: String = ""): DataFrame =
+    seriesScan[String, String, (String, String, Long)](Seq(df), tsCol,
+        seriesCols, col(typeCol).cast(StringType), None,
+        tie = Some(tieOf(tieCol)),
+        perBatch = rows => scala.collection.immutable.SortedMap.from(
+          rows.groupMapReduce(r => (r._1, r._2))(_._3)(_ + _))
+          .iterator.map { case ((f, t), n) => (f, t, n) }) { (_, prev, e) =>
+      (Some(e.x), prev.flatMap(p => Option(p.s)).map(f => (f, e.x, 1L)))
+    }.toDF("from_type", "to_type", "n")
 
   // ------------------------------------------------ streaming interpolation
-  case class InterpEvent(series: String, tsUs: Long, value: Double,
-      eventTime: java.sql.Timestamp)
-  case class LastObs(tsUs: Long, value: Double)
-  case class InterpOut(series: String, tsUs: Long, value: Double,
-      isInterpolated: Boolean)
-
   /** Streaming gap-fill: each series is resampled onto the `freq` grid and
     * missing buckets are emitted with `ffill` (previous value) or `linear`
     * (lerp between the flanking observations) — the streaming analog of the
     * batch resample+interpolate pipeline, emitted incrementally with ONE
-    * (ts, value) record of state per series.
+    * double of state per series (its mark is the last emitted bucket).
     *
     * On each observation at bucket b_cur with previous observation at bucket
     * b_prev, the operator emits the interpolated buckets (b_prev, b_cur)
@@ -1904,90 +1247,54 @@ object StreamingTSDF {
     * an append sink sees each (series, bucket) exactly once — the same
     * granularity as batch `resample(freq, "floor")`, whose resample +
     * interpolate pipeline this operator equals row-for-row (asserted
-    * differentially on random series in the spec).
-    *
-    * `stateTtl` evicts idle series once the watermark passes them (a later
-    * observation then starts a fresh segment instead of filling across the
-    * idle gap).
+    * differentially on random series in the spec). The [[seriesScan]] axis
+    * is the bucket (ties ordered by raw time), so late rows and `stateTtl`
+    * follow its contract on the grid: an evicted series starts a fresh
+    * segment instead of filling across the idle gap.
     */
   def interpolate(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, freq: String, method: String = "ffill",
       stateTtl: Option[String] = None): DataFrame = {
     require(method == "ffill" || method == "linear",
       s"streaming interpolate supports ffill|linear, got '$method'")
-    val spark = df.sparkSession
-    import spark.implicits._
     val stepUs = Resample.parseFreq(freq).micros
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[InterpEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[InterpEvent], state: GroupState[LastObs]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var last = state.getOption.orNull
-            val outRows = Seq.newBuilder[InterpOut]
-            sorted.foreach { e =>
-              val bucket = Math.floorDiv(e.tsUs, stepUs) * stepUs
-              if (last != null && bucket > last.tsUs) {
-                var t = last.tsUs + stepUs
-                while (t < bucket) {
-                  val v = method match {
-                    case "ffill" => last.value
-                    case "linear" => last.value + (e.value - last.value) *
-                      ((t - last.tsUs).toDouble / (bucket - last.tsUs).toDouble)
-                  }
-                  outRows += InterpOut(key, t, v, isInterpolated = true)
-                  t += stepUs
+    val us = unix_micros(col(tsCol))
+    val out = seriesScan[Double, Double, (String, Long, Double, Boolean)](
+        Seq(df), tsCol, seriesCols, col(valueCol).cast(DoubleType), stateTtl,
+        tie = Some(us), axisUs = Some(us - pmod(us, lit(stepUs)))) {
+      (key, last, e) =>
+        // a second observation in an already-emitted bucket must not
+        // re-emit it (append sinks would see duplicates)
+        if (last.exists(_.hwUs >= e.tsUs)) (None, None)
+        else {
+          val filled = last.iterator.flatMap { l =>
+            Iterator.iterate(l.hwUs + stepUs)(_ + stepUs).takeWhile(_ < e.tsUs)
+              .map { t =>
+                val v = method match {
+                  case "ffill" => l.s
+                  case "linear" => l.s + (e.x - l.s) *
+                    ((t - l.hwUs).toDouble / (e.tsUs - l.hwUs).toDouble)
                 }
+                (key, t, v, true)
               }
-              // strictly greater: a second observation in an already-emitted
-              // bucket must not re-emit it (append sinks would see duplicates)
-              if (last == null || bucket > last.tsUs) {
-                outRows += InterpOut(key, bucket, e.value, isInterpolated = false)
-                last = LastObs(bucket, e.value)
-              }
-            }
-            if (last != null) {
-              state.update(last)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(last.tsUs / 1000, state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.result().iterator
           }
-      }
-    out.toDF()
-      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-        timestamp_micros(col("tsUs")).alias(tsCol),
-        col("value").alias(valueCol),
-        col("isInterpolated").alias("is_ts_interpolated")): _*)
+          (Some(e.x), filled ++ Iterator.single((key, e.tsUs, e.x, false)))
+        }
+    }
+    valueCols(out, df, tsCol, seriesCols, valueCol, Seq("is_ts_interpolated"))
   }
 
   // ------------------------------------------------ stateful run tracking
-  case class ObsEvent(series: String, tsUs: Long, metrics: Seq[Double],
-      eventTime: java.sql.Timestamp)
-  case class RunState(startUs: Long, lastUs: Long, metrics: Seq[Double],
-      observations: Int)
+  case class RunState(startUs: Long, metrics: Seq[Double], observations: Int)
 
   /** Streaming analog of `extractStateIntervals` (equality state): per
     * series, maximal runs of consecutive observations with identical metric
     * vectors close and emit [start_ts, end_ts] when the state changes.
     *
-    * State per key is one open run (constant size). Rows inside a micro
-    * batch are sorted by event time; LATE rows arriving after their run
-    * closed start a new run rather than rewriting history — the documented
+    * State per key is one open run (constant size; its mark is the run's
+    * last observation). Rows inside a micro batch are sorted by event time;
+    * no row is dropped as late: LATE rows arriving after their run closed
+    * start a new run rather than rewriting history — the documented
     * streaming-consistency trade-off vs the batch operator.
     *
     * `stateTtl` (optional): once the watermark passes the run's last
@@ -1997,349 +1304,140 @@ object StreamingTSDF {
     */
   def stateIntervalRuns(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       metricCols: Seq[String], stateTtl: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      array(metricCols.map(col(_).cast(DoubleType)): _*).alias("metrics"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[ObsEvent]
-
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[ObsEvent], state: GroupState[RunState]) =>
-          if (state.hasTimedOut) {
-            val cur = state.get
-            state.remove()
-            if (cur.observations >= 2) Iterator((key, cur.startUs, cur.lastUs))
-            else Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val closed = Seq.newBuilder[(String, Long, Long)]
-            sorted.foreach { e =>
-              if (cur == null) cur = RunState(e.tsUs, e.tsUs, e.metrics, 1)
-              else if (cur.metrics == e.metrics)
-                cur = cur.copy(lastUs = e.tsUs, observations = cur.observations + 1)
-              else {
-                if (cur.observations >= 2) closed += ((key, cur.startUs, cur.lastUs))
-                cur = RunState(e.tsUs, e.tsUs, e.metrics, 1)
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastUs / 1000, state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            closed.result().iterator
-          }
+    def closed(key: String, run: Scan[RunState]) =
+      if (run.s.observations >= 2) Some((key, run.s.startUs, run.hwUs)) else None
+    seriesScan[Seq[Double], RunState, (String, Long, Long)](Seq(df), tsCol,
+        seriesCols, array(metricCols.map(col(_).cast(DoubleType)): _*),
+        stateTtl, dropLate = false,
+        flush = (key, run) => closed(key, run).iterator) { (key, cur, e) =>
+      cur match {
+        case Some(run) if run.s.metrics == e.x =>
+          (Some(run.s.copy(observations = run.s.observations + 1)), None)
+        case _ => (Some(RunState(e.tsUs, e.x, 1)), cur.flatMap(closed(key, _)))
       }
-      .toDF("series", "start_us", "end_us")
-    out
+    }.toDF("series", "start_us", "end_us")
       .withColumn("start_ts", timestamp_micros(col("start_us")))
       .withColumn("end_ts", timestamp_micros(col("end_us")))
       .select(typedSeriesCols(df.schema, seriesCols) :+ col("start_ts") :+ col("end_ts"): _*)
   }
 
-  case class ThreshState(lastValue: Double, lastTsUs: Long)
-
-  /** Streaming threshold-crossing detector: one (value, ts) pair of state
-    * per series, the twin of [[graft.tsdf.Stats.thresholdCrossings]] —
-    * emits a row only when the series crosses `threshold` between
-    * consecutive observations. Late rows (older than the last processed
-    * timestamp) are DROPPED, matching the in-order contract of the other
-    * indicator twins. Output: series + (ts, prev_ts, prev_value, value,
-    * direction). */
+  /** Streaming threshold-crossing detector: one value of state per series
+    * (its mark is the previous timestamp), the twin of
+    * [[graft.tsdf.Stats.thresholdCrossings]] — emits a row only when the
+    * series crosses `threshold` between consecutive observations. Late
+    * rows and `stateTtl` follow the [[seriesScan]] contract. Output:
+    * series + (ts, prev_ts, prev_value, value, direction). */
   def thresholdCrossings(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, threshold: Double,
-      stateTtl: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[ThreshState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              if (cur != null && e.tsUs < cur.lastTsUs) None
-              else {
-                val emit =
-                  if (cur == null) None
-                  else {
-                    val up = cur.lastValue < threshold && e.value >= threshold
-                    val down = cur.lastValue >= threshold && e.value < threshold
-                    if (up || down)
-                      Some((key, e.tsUs, cur.lastTsUs, cur.lastValue,
-                        e.value, if (up) "up" else "down"))
-                    else None
-                  }
-                cur = ThreshState(e.value, e.tsUs)
-                emit
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "prevTsUs", "prev_value", "value", "direction")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      timestamp_micros(col("prevTsUs")).alias("prev_ts"),
-      col("prev_value"), col("value").alias(valueCol), col("direction")): _*)
-  }
+      stateTtl: Option[String] = None): DataFrame =
+    seriesScan[Double, Double, (String, Long, Long, Double, Double, String)](
+        Seq(df), tsCol, seriesCols, col(valueCol).cast(DoubleType), stateTtl) {
+      (key, prev, e) =>
+        (Some(e.x), prev.flatMap { p =>
+          val up = p.s < threshold && e.x >= threshold
+          val down = p.s >= threshold && e.x < threshold
+          if (up || down)
+            Some((key, e.tsUs, p.hwUs, p.s, e.x, if (up) "up" else "down"))
+          else None
+        })
+    }.toDF("series", "tsUs", "prevTsUs", "prev_value", "value", "direction")
+      .select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
+        timestamp_micros(col("tsUs")).alias(tsCol),
+        timestamp_micros(col("prevTsUs")).alias("prev_ts"),
+        col("prev_value"), col("value").alias(valueCol), col("direction")): _*)
 
   case class StochState(recent: Seq[Double], k1: Option[Double],
-      k2: Option[Double], lastTsUs: Long)
+      k2: Option[Double])
 
   /** Streaming stochastic oscillator: per-series state is the trailing
     * `window − 1` values (the frame buffer, like [[rollingMedian]]) plus
     * the previous two %K values for the %D mean — bit-identical to
     * [[graft.tsdf.Stats.stochastic]] (same selections, same fixed-order
-    * IEEE assembly; differentially asserted). Late rows are DROPPED.
-    * Output: series + ts + value + pct_k + pct_d. */
+    * IEEE assembly; differentially asserted). Late rows and `stateTtl`
+    * follow the [[seriesScan]] contract. Output: series + ts + value +
+    * pct_k + pct_d. */
   def stochastic(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, window: Int,
       stateTtl: Option[String] = None): DataFrame = {
     require(window >= 1, "window must be >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[StochState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.getOrElse(
-              StochState(Vector.empty, None, None, Long.MinValue))
-            var seen = state.exists
-            val outRows = sorted.flatMap { e =>
-              if (seen && e.tsUs < cur.lastTsUs) None
-              else {
-                seen = true
-                val frame = (cur.recent :+ e.value).takeRight(window)
-                val ll = frame.min
-                val hh = frame.max
-                val k: Option[Double] =
-                  if (hh == ll) None
-                  else Some(100.0 * (e.value - ll) / (hh - ll))
-                val d: Option[Double] =
-                  for (a <- cur.k2; b <- cur.k1; c <- k)
-                    yield (a + b + c) / 3.0
-                cur = StochState((cur.recent :+ e.value).takeRight(window - 1),
-                  k, cur.k1, e.tsUs)
-                Some((key, e.tsUs, e.value, k, d))
-              }
-            }
-            if (seen) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "pct_k", "pct_d")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol), col("pct_k"), col("pct_d")): _*)
+    valueScan[StochState,
+        (String, Long, Double, Option[Double], Option[Double])](df, tsCol,
+        seriesCols, valueCol, stateTtl, "pct_k", "pct_d") { (key, prev, e) =>
+      val cur = prev.fold(StochState(Vector.empty, None, None))(_.s)
+      val frame = (cur.recent :+ e.x).takeRight(window)
+      val ll = frame.min
+      val hh = frame.max
+      val k = if (hh == ll) None else Some(100.0 * (e.x - ll) / (hh - ll))
+      val d = for (a <- cur.k2; b <- cur.k1; c <- k) yield (a + b + c) / 3.0
+      (Some(StochState((cur.recent :+ e.x).takeRight(window - 1), k, cur.k1)),
+        Some((key, e.tsUs, e.x, k, d)))
+    }
   }
-
-  case class DonchianState(recent: Seq[Double], lastTsUs: Long)
 
   /** Streaming Donchian channels: per-series state is the trailing
     * `window − 1` values, the twin of [[graft.tsdf.Stats.donchian]] —
     * upper/lower are frame selections, mid the same fixed-order IEEE
-    * expression (differentially asserted bit-identical). Late rows are
-    * DROPPED. Output: series + ts + value + dc_upper + dc_lower +
-    * dc_mid. */
+    * expression (differentially asserted bit-identical). Late rows and
+    * `stateTtl` follow the [[seriesScan]] contract. Output: series + ts +
+    * value + dc_upper + dc_lower + dc_mid. */
   def donchian(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, window: Int,
       stateTtl: Option[String] = None): DataFrame = {
     require(window >= 1, "window must be >= 1")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[DonchianState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.getOrElse(
-              DonchianState(Vector.empty, Long.MinValue))
-            var seen = state.exists
-            val outRows = sorted.flatMap { e =>
-              if (seen && e.tsUs < cur.lastTsUs) None
-              else {
-                seen = true
-                val frame = (cur.recent :+ e.value).takeRight(window)
-                val upper = frame.max
-                val lower = frame.min
-                cur = DonchianState(
-                  (cur.recent :+ e.value).takeRight(window - 1), e.tsUs)
-                Some((key, e.tsUs, e.value, upper, lower,
-                  (upper + lower) / 2.0))
-              }
-            }
-            if (seen) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "dc_upper", "dc_lower", "dc_mid")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol), col("dc_upper"), col("dc_lower"),
-      col("dc_mid")): _*)
+    valueScan[Seq[Double], (String, Long, Double, Double, Double, Double)](df,
+        tsCol, seriesCols, valueCol, stateTtl, "dc_upper", "dc_lower",
+        "dc_mid") { (key, prev, e) =>
+      val recent = prev.fold(Vector.empty[Double]: Seq[Double])(_.s) :+ e.x
+      val frame = recent.takeRight(window)
+      val upper = frame.max
+      val lower = frame.min
+      (Some(recent.takeRight(window - 1)),
+        Some((key, e.tsUs, e.x, upper, lower, (upper + lower) / 2.0)))
+    }
   }
 
   case class HwState(cnt: Int, warmSum: Double, level: Double,
-      trend: Double, ring: Seq[Double], lastTsUs: Long)
+      trend: Double, ring: Seq[Double])
 
   /** Streaming additive Holt-Winters: per-series state is the warm-up
     * accumulator plus the rotated `m`-factor seasonal ring — the twin of
     * [[graft.tsdf.Stats.holtWinters]] / [[graft.functions
     * .HoltWintersExact]], bit-identical by construction (same fixed-order
     * IEEE recursion, same rotation; differentially asserted). Emits null
-    * level/trend/seasonal through the first season. Late rows are
-    * DROPPED. Output: series + ts + value + hw_level + hw_trend +
-    * hw_seasonal. */
+    * level/trend/seasonal through the first season. Late rows and
+    * `stateTtl` follow the [[seriesScan]] contract. Output: series + ts +
+    * value + hw_level + hw_trend + hw_seasonal. */
   def holtWinters(df: DataFrame, tsCol: String, seriesCols: Seq[String],
       valueCol: String, alpha: Double, beta: Double, gamma: Double, m: Int,
       stateTtl: Option[String] = None): DataFrame = {
     require(m >= 2, "season length m must be >= 2")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(seriesCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(valueCol).cast(DoubleType).alias("value"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[EmaEvent]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[EmaEvent], state: GroupState[HwState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(_.tsUs)
-            var cur = state.getOption.getOrElse(
-              HwState(0, 0.0, 0.0, 0.0, Vector.empty, Long.MinValue))
-            var seen = state.exists
-            val outRows = sorted.flatMap { e =>
-              if (seen && e.tsUs < cur.lastTsUs) None
-              else {
-                seen = true
-                val x = e.value
-                val cnt = cur.cnt + 1
-                cur =
-                  if (cnt < m)
-                    cur.copy(cnt = cnt, warmSum = cur.warmSum + x,
-                      ring = cur.ring :+ x, lastTsUs = e.tsUs)
-                  else if (cnt == m) {
-                    val ws = cur.warmSum + x
-                    val level = ws / m
-                    HwState(cnt, ws, level, 0.0,
-                      (cur.ring :+ x).map(w => w - level), e.tsUs)
-                  } else {
-                    val sPrev = cur.ring.head
-                    val nl = alpha * (x - sPrev) +
-                      (1 - alpha) * (cur.level + cur.trend)
-                    val nt = beta * (nl - cur.level) + (1 - beta) * cur.trend
-                    val sNew = gamma * (x - nl) + (1 - gamma) * sPrev
-                    HwState(cnt, cur.warmSum, nl, nt,
-                      cur.ring.tail :+ sNew, e.tsUs)
-                  }
-                val emit: (Option[Double], Option[Double], Option[Double]) =
-                  if (cnt > m)
-                    (Some(cur.level), Some(cur.trend), Some(cur.ring.last))
-                  else (None, None, None)
-                Some((key, e.tsUs, x, emit._1, emit._2, emit._3))
-              }
-            }
-            if (seen) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "value", "hw_level", "hw_trend", "hw_seasonal")
-    out.select(typedSeriesCols(df.schema, seriesCols) ++ Seq(
-      timestamp_micros(col("tsUs")).alias(tsCol),
-      col("value").alias(valueCol), col("hw_level"), col("hw_trend"),
-      col("hw_seasonal")): _*)
+    valueScan[HwState, (String, Long, Double, Option[Double], Option[Double],
+        Option[Double])](df, tsCol, seriesCols, valueCol, stateTtl,
+        "hw_level", "hw_trend", "hw_seasonal") { (key, prev, e) =>
+      val cur = prev.fold(HwState(0, 0.0, 0.0, 0.0, Vector.empty))(_.s)
+      val x = e.x
+      val cnt = cur.cnt + 1
+      val next =
+        if (cnt < m)
+          cur.copy(cnt = cnt, warmSum = cur.warmSum + x, ring = cur.ring :+ x)
+        else if (cnt == m) {
+          val ws = cur.warmSum + x
+          val level = ws / m
+          HwState(cnt, ws, level, 0.0, (cur.ring :+ x).map(w => w - level))
+        } else {
+          val sPrev = cur.ring.head
+          val nl = alpha * (x - sPrev) + (1 - alpha) * (cur.level + cur.trend)
+          val nt = beta * (nl - cur.level) + (1 - beta) * cur.trend
+          val sNew = gamma * (x - nl) + (1 - gamma) * sPrev
+          HwState(cnt, cur.warmSum, nl, nt, cur.ring.tail :+ sNew)
+        }
+      val warm = cnt > m
+      (Some(next), Some((key, e.tsUs, x, Option.when(warm)(next.level),
+        Option.when(warm)(next.trend), Option.when(warm)(next.ring.last))))
+    }
   }
 
   // ------------------------------------------------- streaming SCD2 changelog
-  case class Scd2Event(series: String, tsUs: Long, tie: Long,
-      attrs: Seq[String], eventTime: java.sql.Timestamp)
-  case class Scd2State(attrs: Seq[String], lastTsUs: Long, lastTie: Long)
-
   /** Streaming SCD2 CHANGELOG — the dimension-maintenance face of
     * [[graft.pipeline.Cdc.scd2FromLog]]: per id, emit a row whenever the
     * tracked attributes differ (null-safe) from the previous change, in
@@ -2347,66 +1445,26 @@ object StreamingTSDF {
     * exactly the batch operator's collapsed change set (its `valid_from`
     * rows) — `valid_to` is a derivable view (lead over the changelog), so
     * the append-only sink stays monotone and never rewrites history.
-    * State per id is ONE attribute tuple (constant size; `stateTtl`
-    * evicts ids idle past the watermark). Rows arriving out of order
-    * across micro-batches (ts below the id's last change) are skipped —
-    * the same documented append-mode trade as [[asOfJoin]]; within a
-    * micro-batch, rows process in (ts, tie) order. `tieCol` totalizes the
-    * order on duplicate timestamps like the batch tieCols. */
+    * State per id is ONE attribute tuple (constant size). Late rows and
+    * `stateTtl` follow the [[seriesScan]] contract with (ts, tie) as the
+    * total order; `tieCol` totalizes the order on duplicate timestamps
+    * like the batch tieCols. */
   def scd2Changelog(df: DataFrame, idCols: Seq[String], tsCol: String,
       attrCols: Seq[String], tieCol: String,
       stateTtl: Option[String] = None): DataFrame = {
     require(attrCols.nonEmpty, "need at least one tracked attribute")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val projected = df.select(
-      seriesKey(idCols).alias("series"),
-      unix_micros(col(tsCol)).alias("tsUs"),
-      col(tieCol).cast(LongType).alias("tie"),
-      array(attrCols.map(col(_).cast(StringType)): _*).alias("attrs"),
-      col(tsCol).alias("eventTime"))
-    val events = stateTtl.fold(projected)(ttl =>
-      projected.withWatermark("eventTime", ttl)).as[Scd2Event]
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    val out = events
-      .groupByKey(_.series)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (key: String, rows: Iterator[Scd2Event], state: GroupState[Scd2State]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(e => (e.tsUs, e.tie))
-            var cur = state.getOption.orNull
-            val outRows = sorted.flatMap { e =>
-              val late = cur != null && (e.tsUs < cur.lastTsUs ||
-                (e.tsUs == cur.lastTsUs && e.tie <= cur.lastTie))
-              if (late) None
-              else {
-                // null-safe element compare: Seq equality treats null
-                // elements as equal, mirroring the batch <=> struct
-                val changed = cur == null || cur.attrs != e.attrs
-                cur = Scd2State(e.attrs, e.tsUs, e.tie)
-                if (changed) Some((key, e.tsUs, e.attrs)) else None
-              }
-            }
-            if (cur != null) {
-              state.update(cur)
-              stateTtl.foreach(ttl => state.setTimeoutTimestamp(
-                math.max(cur.lastTsUs / 1000,
-                  state.getCurrentWatermarkMs() + 1), ttl))
-            }
-            outRows.iterator
-          }
-      }
-      .toDF("series", "tsUs", "attrs")
-    out.select(typedSeriesCols(df.schema, idCols) ++
-      (timestamp_micros(col("tsUs")).alias(tsCol) +:
-        attrCols.zipWithIndex.map { case (a, i) =>
-          col("attrs").getItem(i).cast(df.schema(a).dataType).alias(a)
-        }): _*)
+    seriesScan[Seq[String], Seq[String], (String, Long, Seq[String])](Seq(df),
+        tsCol, idCols, array(attrCols.map(col(_).cast(StringType)): _*),
+        stateTtl, tie = Some(col(tieCol))) { (key, prev, e) =>
+      // null-safe element compare: Seq equality treats null elements as
+      // equal, mirroring the batch <=> struct
+      (Some(e.x), if (prev.forall(_.s != e.x)) Some((key, e.tsUs, e.x)) else None)
+    }.toDF("series", "tsUs", "attrs")
+      .select(typedSeriesCols(df.schema, idCols) ++
+        (timestamp_micros(col("tsUs")).alias(tsCol) +:
+          attrCols.zipWithIndex.map { case (a, i) =>
+            col("attrs").getItem(i).cast(df.schema(a).dataType).alias(a)
+          }): _*)
   }
 
   // ----------------------------------------------- streaming intervals

@@ -37,8 +37,12 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     }
 
   private var runId = 0
+
+  /** Feed `rows` as `slices` globally time-ordered micro-batches (one
+    * batch per slice), so no row is ever late and every series' state is
+    * handed across each batch boundary. */
   private def runStream(rows: Seq[(String, Timestamp, Double)],
-      build: DataFrame => DataFrame): DataFrame = {
+      build: DataFrame => DataFrame, slices: Int = 1): DataFrame = {
     val spark2 = spark
     import spark2.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -48,11 +52,18 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val out = build(mem.toDF().toDF("user_id", "ts", "value"))
     val q = out.writeStream.format("memory").queryName(name)
       .outputMode(OutputMode.Append()).start()
-    mem.addData(rows: _*)
-    q.processAllAvailable()
+    val ordered = rows.sortBy(r => (r._2.getTime, r._1))
+    ordered.grouped(math.max(1, (ordered.size + slices - 1) / slices))
+      .foreach { slice =>
+        mem.addData(slice: _*)
+        q.processAllAvailable()
+      }
     q.stop()
     spark.table(name)
   }
+
+  /** Trials 0..3 run as 1, 2, 3 and 4 micro-batches. */
+  private def slicesFor(trial: Int): Int = 1 + trial % 4
 
   test("property: disjointIntervals latest-rev snapshot equals batch " +
       "makeDisjoint on random intervals across random-ORDER micro-batches") {
@@ -826,7 +837,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val rnd = new scala.util.Random(67)
     (0 until 4).foreach { trial =>
       val rows = randomSeries(rnd, pinEnds = false)
-      val streamed = runStream(rows, df =>
+      val streamed = runStream(rows, slices = slicesFor(trial), build = df =>
         StreamingTSDF.ewmVolatility(df, "ts", Seq("user_id"), "value",
           alpha = 0.3))
         .select(col("user_id"), col("ts"), col("value"),
@@ -847,7 +858,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val rnd = new scala.util.Random(71)
     (0 until 4).foreach { trial =>
       val rows = randomSeries(rnd, pinEnds = false)
-      val streamed = runStream(rows, df =>
+      val streamed = runStream(rows, slices = slicesFor(trial), build = df =>
         StreamingTSDF.rsi(df, "ts", Seq("user_id"), "value", n = 14))
         .select(col("user_id"), col("ts"), col("value"),
           col("rsi_value").alias("r"))
@@ -865,7 +876,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val rnd = new scala.util.Random(73)
     (0 until 4).foreach { trial =>
       val rows = randomSeries(rnd, pinEnds = false)
-      val streamed = runStream(rows, df =>
+      val streamed = runStream(rows, slices = slicesFor(trial), build = df =>
         StreamingTSDF.macd(df, "ts", Seq("user_id"), "value"))
         .select(col("user_id"), col("ts"), col("value"),
           col("macd_value").alias("m"), col("macd_signal_value").alias("s"),
@@ -885,7 +896,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val rnd = new scala.util.Random(61)
     (0 until 4).foreach { trial =>
       val rows = randomSeries(rnd, pinEnds = false)
-      val streamed = runStream(rows, df =>
+      val streamed = runStream(rows, slices = slicesFor(trial), build = df =>
         StreamingTSDF.drawdown(df, "ts", Seq("user_id"), "value"))
         .select(col("user_id"), col("ts"), col("value"),
           col("peak_value").alias("pk"), col("drawdown_value").alias("dd"))
@@ -904,7 +915,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val rnd = new scala.util.Random(67)
     (0 until 4).foreach { trial =>
       val rows = randomSeries(rnd, pinEnds = false)
-      val streamed = runStream(rows, df =>
+      val streamed = runStream(rows, slices = slicesFor(trial), build = df =>
         StreamingTSDF.thresholdCrossings(df, "ts", Seq("user_id"), "value",
           threshold = 500.0))
         .select(col("user_id"), col("ts"), col("prev_ts"),
@@ -924,7 +935,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val rnd = new scala.util.Random(68)
     (0 until 4).foreach { trial =>
       val rows = randomSeries(rnd, pinEnds = false)
-      val streamed = runStream(rows, df =>
+      val streamed = runStream(rows, slices = slicesFor(trial), build = df =>
         StreamingTSDF.stochastic(df, "ts", Seq("user_id"), "value",
           window = 5))
         .select(col("user_id"), col("ts"), col("value"),
@@ -944,7 +955,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val rnd = new scala.util.Random(69)
     (0 until 4).foreach { trial =>
       val rows = randomSeries(rnd, pinEnds = false)
-      val streamed = runStream(rows, df =>
+      val streamed = runStream(rows, slices = slicesFor(trial), build = df =>
         StreamingTSDF.donchian(df, "ts", Seq("user_id"), "value",
           window = 5))
         .select(col("user_id"), col("ts"), col("value"),
@@ -964,7 +975,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val rnd = new scala.util.Random(70)
     (0 until 4).foreach { trial =>
       val rows = randomSeries(rnd, pinEnds = false)
-      val streamed = runStream(rows, df =>
+      val streamed = runStream(rows, slices = slicesFor(trial), build = df =>
         StreamingTSDF.holtWinters(df, "ts", Seq("user_id"), "value",
           alpha = 0.5, beta = 0.25, gamma = 0.5, m = 5))
         .select(col("user_id"), col("ts"), col("value"),
@@ -985,7 +996,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val rnd = new scala.util.Random(53)
     (0 until 4).foreach { trial =>
       val rows = randomSeries(rnd, pinEnds = false)
-      val streamed = runStream(rows, df =>
+      val streamed = runStream(rows, slices = slicesFor(trial), build = df =>
         StreamingTSDF.kalmanLevel(df, "ts", Seq("user_id"), "value",
           q = 0.3, r = 2.7))
         .select(col("user_id"), col("ts"), col("value"),
@@ -1010,7 +1021,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val rnd = new scala.util.Random(48)
     (0 until 4).foreach { trial =>
       val rows = randomSeries(rnd, pinEnds = false)
-      val streamed = runStream(rows, df =>
+      val streamed = runStream(rows, slices = slicesFor(trial), build = df =>
         StreamingTSDF.rollingMedian(df, "ts", Seq("user_id"), "value", window = 5))
         .select(col("user_id"), col("ts"), col("value"),
           col("rolling_median_value").alias("med"))
@@ -1050,7 +1061,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val rnd = new scala.util.Random(47)
     (0 until 4).foreach { trial =>
       val rows = randomSeries(rnd, pinEnds = false)
-      val streamed = runStream(rows, df =>
+      val streamed = runStream(rows, slices = slicesFor(trial), build = df =>
         StreamingTSDF.cusumControl(df, "ts", Seq("user_id"), "value",
           target = 500L, slack = 10L, threshold = 2000L))
         .select("user_id", "ts", "value", "cusum_hi", "cusum_lo", "alert")
@@ -1070,7 +1081,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
     val rnd = new scala.util.Random(49)
     (0 until 4).foreach { trial =>
       val rows = randomSeries(rnd, pinEnds = false)
-      val streamed = runStream(rows, df =>
+      val streamed = runStream(rows, slices = slicesFor(trial), build = df =>
         StreamingTSDF.gaps(df, "ts", Seq("user_id"), minGapSeconds = 30))
         .select("user_id", "gap_start", "gap_end", "gap_seconds")
       val spark2 = spark
@@ -1186,7 +1197,7 @@ class StreamingBatchDifferentialSpec extends SparkTestBase {
       // ends pinned so the batch spine (first..last bucket per series) spans
       // the same range the streaming operator emits
       val rows = randomSeries(rnd, pinEnds = true)
-      val streamed = runStream(rows, df =>
+      val streamed = runStream(rows, slices = slicesFor(trial), build = df =>
         StreamingTSDF.interpolate(df, "ts", Seq("user_id"), "value",
           "1 minute", method))
         .select("user_id", "ts", "value", "is_ts_interpolated")

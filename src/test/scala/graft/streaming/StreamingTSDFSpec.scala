@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -381,6 +382,127 @@ class StreamingTSDFSpec extends SparkTestBase {
     // ema(00:20) = 0.5*3 + 0.5*ema(00:10) with ema(00:10) = 0.5*2 + 0.5*1
     assert(!emaRows.contains(ts("2024-01-01 00:05:00")), emaRows)
     assert(emaRows(ts("2024-01-01 00:20:00")) == 0.5 * 3.0 + 0.5 * 1.5, emaRows)
+  }
+
+  /** Every late-dropping keyed-scan operator, over (user_id, ts, value);
+    * the second argument is passed as `stateTtl` where the operator has
+    * one (`ttl = false` marks the two that have none). */
+  private case class ScanCase(name: String, ttl: Boolean,
+      build: (DataFrame, Option[String]) => DataFrame)
+
+  private val scanCases: Seq[ScanCase] = {
+    val s = Seq("user_id")
+    Seq(
+      ScanCase("ema", true, (df, t) =>
+        StreamingTSDF.ema(df, "ts", s, "value", 0.5, t)),
+      ScanCase("ewmVolatility", true, (df, t) =>
+        StreamingTSDF.ewmVolatility(df, "ts", s, "value", 0.3, t)),
+      ScanCase("rsi", true, (df, t) =>
+        StreamingTSDF.rsi(df, "ts", s, "value", 3, t)),
+      ScanCase("macd", true, (df, t) =>
+        StreamingTSDF.macd(df, "ts", s, "value", 2, 3, 2, t)),
+      ScanCase("drawdown", true, (df, t) =>
+        StreamingTSDF.drawdown(df, "ts", s, "value", t)),
+      ScanCase("holt", true, (df, t) =>
+        StreamingTSDF.holt(df, "ts", s, "value", 0.3, 0.1, t)),
+      ScanCase("kalmanLevel", true, (df, t) =>
+        StreamingTSDF.kalmanLevel(df, "ts", s, "value", 0.3, 2.7, None, t)),
+      ScanCase("rollingMedian", true, (df, t) =>
+        StreamingTSDF.rollingMedian(df, "ts", s, "value", 3, t)),
+      ScanCase("gaps", true, (df, t) =>
+        StreamingTSDF.gaps(df, "ts", s, 240L, t)),
+      ScanCase("cusumControl", true, (df, t) =>
+        StreamingTSDF.cusumControl(df, "ts", s, "value", 2L, 0L, 50L, t)),
+      ScanCase("thresholdCrossings", true, (df, t) =>
+        StreamingTSDF.thresholdCrossings(df, "ts", s, "value", 2.5, t)),
+      ScanCase("stochastic", true, (df, t) =>
+        StreamingTSDF.stochastic(df, "ts", s, "value", 3, t)),
+      ScanCase("donchian", true, (df, t) =>
+        StreamingTSDF.donchian(df, "ts", s, "value", 3, t)),
+      ScanCase("holtWinters", true, (df, t) =>
+        StreamingTSDF.holtWinters(df, "ts", s, "value", 0.5, 0.25, 0.5, 2, t)),
+      ScanCase("interpolate", true, (df, t) =>
+        StreamingTSDF.interpolate(df, "ts", s, "value", "1 minute", "linear", t)),
+      ScanCase("scd2Changelog", true, (df, t) =>
+        StreamingTSDF.scd2Changelog(df.withColumn("tie", lit(0L)), s, "ts",
+          Seq("value"), "tie", t)),
+      ScanCase("patternDfa", false, (df, _) =>
+        StreamingTSDF.patternDfa(df, "ts", s, "value", Map("3" -> "a"),
+          Map((0, "a") -> ((1, false)), (0, "o") -> ((0, false)),
+            (1, "a") -> ((1, false)), (1, "o") -> ((0, true))))),
+      ScanCase("transitionDeltas", false, (df, _) =>
+        StreamingTSDF.transitionDeltas(df, "ts", s, "value")))
+  }
+
+  private var scanRun = 0
+
+  /** Run `c` over `batches`, one micro-batch each; returns the rows the
+    * sink gained in each batch (as multisets, in batch order). */
+  private def scanBatches(c: ScanCase, ttl: Option[String],
+      batches: Seq[Seq[(String, Timestamp, Double)]])
+      : Seq[Seq[Row]] = {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    scanRun += 1
+    val name = s"scan_case_$scanRun"
+    val mem = MemoryStream[(String, Timestamp, Double)]
+    val q = c.build(mem.toDF().toDF("user_id", "ts", "value"), ttl)
+      .writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Append()).start()
+    var seen = Seq.empty[Row]
+    val gained = batches.map { b =>
+      mem.addData(b: _*)
+      q.processAllAvailable()
+      val now = spark.table(name).collect().toSeq
+      val added = now.diff(seen)
+      seen = now
+      added
+    }
+    q.stop()
+    gained
+  }
+
+  test("every late-dropping scan operator: a late row emits nothing and " +
+      "the next on-time row's output equals a run without the late row") {
+    val first = Seq(
+      ("u1", ts("2024-01-01 00:00:10"), 1.0),
+      ("u1", ts("2024-01-01 00:10:00"), 3.0),
+      ("u2", ts("2024-01-01 00:03:00"), 5.0))
+    val late = ("u1", ts("2024-01-01 00:05:00"), 99.0)
+    val onTime = Seq(
+      ("u1", ts("2024-01-01 00:20:00"), 2.0),
+      ("u2", ts("2024-01-01 00:04:00"), 6.0))
+    scanCases.foreach { c =>
+      withClue(s"${c.name}: ") {
+        val withLate = scanBatches(c, None, Seq(first, late +: onTime))
+        val without = scanBatches(c, None, Seq(first, onTime))
+        assert(withLate.head.toSet == without.head.toSet)
+        assert(withLate(1).sortBy(_.toString) == without(1).sortBy(_.toString))
+      }
+    }
+  }
+
+  test("every TTL scan operator: a series idle past stateTtl restarts, " +
+      "and its next row's output equals a fresh series' first-row output") {
+    val batches = Seq(
+      Seq(("u1", ts("2024-01-01 00:00:10"), 1.0),
+        ("u1", ts("2024-01-01 00:00:40"), 3.0)),
+      // another series far ahead moves the watermark past u1's TTL; the
+      // engine's no-data batch then times u1 out
+      Seq(("zz", ts("2024-01-01 02:00:00"), 0.0)),
+      Seq(("u1", ts("2024-01-01 02:00:30"), 2.0),
+        ("u9", ts("2024-01-01 02:00:30"), 2.0)))
+    scanCases.filter(_.ttl).foreach { c =>
+      withClue(s"${c.name}: ") {
+        val last = scanBatches(c, Some("1 minute"), batches).last
+        def rowsOf(u: String) = last
+          .filter(_.getAs[String]("user_id") == u)
+          .map(r => r.toSeq.patch(r.fieldIndex("user_id"), Nil, 1))
+          .sortBy(_.toString)
+        assert(rowsOf("u1") == rowsOf("u9"))
+      }
+    }
   }
 
   test("stateful run extraction closes intervals on state change") {
