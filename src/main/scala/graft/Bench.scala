@@ -13,7 +13,9 @@ import org.apache.spark.sql.SparkSession
   * Methodology: one untimed warm-up pass over every selected query (JIT,
   * codegen cache, parquet footers, OS page cache), then
   * `SPARK_GRAFT_BENCH_REPS` (default 3) timed passes; the reported number
-  * per query is the median across passes. A single-pass timing in registry
+  * per query is the median across passes. A query that throws in any pass
+  * (warm-up included) is listed under `failed` in both JSON lines and left
+  * out of `queries` and `total`. A single-pass timing in registry
   * order conflates run-order/JIT effects with plan cost — e.g. round 5
   * measured q_dedup_exact at 3.3× its true cost purely from cold-start.
   */
@@ -28,6 +30,25 @@ object Bench {
   val Canaries: Seq[String] = Seq("q_resample_floor", "q_interp_ffill",
     "q_welch", "q_slice_ops", "q_vwap", "q_asof", "q_range_stats",
     "q_grouped_stats", "q_state_intervals", "q_describe")
+
+  /** One pass over `queries` in order: the seconds of each query that
+    * ran, and the names of those that threw (reported on stderr), which
+    * get no time at all — a throwing query is never timed as a fast
+    * success. */
+  private[graft] def timePass(queries: Seq[(String, () => Unit)])
+      : (Map[String, Double], Seq[String]) = {
+    val failed = Seq.newBuilder[String]
+    val times = queries.flatMap { case (name, run) =>
+      val t0 = System.nanoTime()
+      try { run(); Some(name -> (System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        failed += name
+        None
+      }
+    }
+    (times.toMap, failed.result())
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -61,10 +82,14 @@ object Bench {
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .toSeq
-    def runOnce(): Seq[(String, Double)] = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+    // a query that throws in any pass is failed: listed under "failed" and
+    // left out of the per-query times and the total
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def runOnce(): Map[String, Double] = {
+      val (times, bad) = timePass(selected.map { case (name, fn) =>
+        name -> (() => { fn(spark, sfDir).count(); () }) })
+      failed ++= bad
+      times
     }
     // JVM/GC + host-load telemetry around the timed region: lets a
     // cross-round reader see whether a diffuse shift came with GC
@@ -83,7 +108,7 @@ object Bench {
     val (gcN0, gcMs0) = gcTotals()
     val load0 = loadAvg()
     val timed0 = System.nanoTime()
-    val passes = (1 to reps).map(_ => runOnce().toMap)
+    val passes = (1 to reps).map(_ => runOnce())
     val timedSec = (System.nanoTime() - timed0) / 1e9
     val (gcN1, gcMs1) = gcTotals()
     val load1 = loadAvg()
@@ -96,22 +121,22 @@ object Bench {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
-    val results = selected.map { case (name, _) =>
-      name -> median(passes.map(_(name)))
-    }
+    val timedOk = selected.map(_._1).filterNot(failed)
+    val results = timedOk.map(name => name -> median(passes.map(_(name))))
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // canary block: per-rep raw times (not just the median) for the
     // frozen-plan set, so dispersion is readable from the artifact
     val canary = Canaries
-      .filter(c => selected.exists(_._1 == c))
+      .filter(timedOk.contains)
       .map { c =>
         "\"" + c + "\":" + passes.map(_(c)).mkString("[", ",", "]")
       }.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"canary":$canary,"telemetry":$telemetry,"sf":"$sfDir","reps":$reps,"warmup":$warmups}"""
-    val detail = selected.map { case (name, _) =>
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"canary":$canary,"telemetry":$telemetry,"sf":"$sfDir","reps":$reps,"warmup":$warmups,"failed":$failedJson}"""
+    val detail = timedOk.map { name =>
       s"\"" + name + "\":" + passes.map(_(name)).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     try {
@@ -137,6 +162,6 @@ object Bench {
     val entries = byTime.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
     val sfName = Paths.get(sfDir).getFileName.toString
     val canarySec = results.filter(r => Canaries.contains(r._1)).map(_._2).sum
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":{${entries.mkString(",")}},"omitted_n":0,"omitted_sec":0.000,"canary_sec":${fmt(canarySec)},"gc_ms":${gcMs1 - gcMs0},"sf":"$sfName","reps":$reps,"warmup":$warmups,"full":"bench_out.json"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":{${entries.mkString(",")}},"omitted_n":0,"omitted_sec":0.000,"failed":$failedJson,"canary_sec":${fmt(canarySec)},"gc_ms":${gcMs1 - gcMs0},"sf":"$sfName","reps":$reps,"warmup":$warmups,"full":"bench_out.json"}""")
   }
 }

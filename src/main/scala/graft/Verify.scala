@@ -26,12 +26,12 @@ object Verify {
     SparkEntry.queries.filter(q => only.isEmpty || only(q._1)).foreach { case (name, fn) =>
       // repartition(1), NOT coalesce(1): coalesce collapses the whole
       // post-shuffle stage into the single writer task, so a query whose
-      // heavy projection sits above its last exchange (the interpreted-HOF
-      // text passes, the decode family) runs the entire corpus on ONE
-      // core inside Verify (measured: q_repetition at sf1 went from one
-      // ~500 s task to a 16-way stage). The extra shuffle moves only the
-      // RESULT rows; the single output file the comparator reads is
-      // unchanged.
+      // heavy projection sits above its last exchange (the media decode
+      // family) runs the entire corpus on ONE core inside Verify
+      // (measured at sf1 while q_repetition still counted grams with
+      // interpreted lambdas: one ~500 s task became a 16-way stage). The
+      // extra shuffle moves only the RESULT rows; the single output file
+      // the comparator reads is unchanged.
       try fn(spark, sfDir).repartition(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -28,18 +29,28 @@ import graft.pipeline.Hashing
   *  - [[WordNGrams]]: consecutive word n-grams of an already-normalized
   *    text — replaces split + sequence/transform/element_at struct
   *    assembly.
+  *  - [[WordShingles]]: distinct word w-shingles as byte slices of the
+  *    normalized text.
   *  - [[WinnowGrams]]: the full Schleimer–Wilkerson–Aiken winnowing
   *    selection (k-gram rolling [[Hashing.polyHash]] + rightmost-min
   *    window selection + consecutive dedup) in O(m) per document —
   *    replaces the interpreted closed-form `least`/`when`-chain cascade
   *    (O(m·w²) with the lambda re-evaluation constant).
+  *  - [[HashedGramBuckets]]: DSIR's hashed unigram+bigram buckets.
+  *  - [[GramRepetition]]: the exact per-order gram counts behind the
+  *    Gopher repetition filters (top-gram count and chars, duplicated-gram
+  *    coverage, duplicate-line char mass) in O(tokens × max order) per
+  *    document — replaces `size(filter(gs, x => x === g))` nested in
+  *    `transform(array_distinct(gs), …)`, O(G²) interpreted per order.
   *
   * Value parity is bit-for-bit and locked by the existing unit suites and
   * the DuckDB oracle replays (which compute the same definitions
   * independently, SQL-side). The byte-level fast paths are exact because
   * normalized text is pure ASCII by construction (only [a-z0-9 ]
   * survives the filter); [[WinnowGrams]] keeps a codepoint fallback for
-  * non-ASCII inputs (parity with `substr`/`length` character counting).
+  * non-ASCII inputs (parity with `substr`/`length` character counting),
+  * and [[GramRepetition]] splits with the same `UTF8String.split` call
+  * as Spark's `split`.
   */
 object TextKernels {
 
@@ -322,6 +333,147 @@ object TextKernels {
     }
     new GenericArrayData(out)
   }
+
+  private val NewLine = UTF8String.fromString("\n")
+  private val Space = UTF8String.fromString(" ")
+
+  /** Dense first-occurrence ids of `key(0 until n)`: equal keys, equal
+    * ids (hash map on the keys themselves, so equality is exact). */
+  private def denseIds[K](n: Int)(key: Int => K): Array[Int] = {
+    val seen = new java.util.HashMap[K, Integer](2 * n)
+    val ids = new Array[Int](n)
+    var i = 0
+    while (i < n) {
+      val prev = seen.putIfAbsent(key(i), seen.size)
+      ids(i) = if (prev == null) seen.size - 1 else prev
+      i += 1
+    }
+    ids
+  }
+
+  /** Occurrence count of each position's id; ids from [[denseIds]], so
+    * every id is below `ids.length`. */
+  private def countsAt(ids: Array[Int]): Array[Int] = {
+    val byId = new Array[Int](ids.length)
+    ids.foreach(id => byId(id) += 1)
+    ids.map(byId)
+  }
+
+  /** The Gopher repetition counts of one document, all exact integers
+    * (the row layout of [[GramRepetition.schema]]):
+    *
+    *  - `tok_chars`: chars of the tokens of `split(normalized, " ")`;
+    *  - `line_chars` / `dup_line_chars`: chars of the lines of
+    *    `split(text, "\n")`, all of them / those of every line occurring
+    *    ≥ 2 times (each occurrence counted);
+    *  - per order n in `orders`: the gram count G = max(0, T − n + 1),
+    *    the top count (most frequent gram's occurrences, 0 when G = 0),
+    *    the largest char length (token chars, no joining spaces) among the
+    *    grams reaching it, and the chars of every token spanned by a gram
+    *    occurring ≥ 2 times (each token once).
+    *
+    * Lines and tokens come from `UTF8String.split(_, -1)`, the call
+    * Spark's `split` makes (empty pieces kept, so "" is one empty token;
+    * undecodable bytes become U+FFFD), and char lengths are `numChars`,
+    * the `length()` of the Column form. Grams are identified by chaining
+    * ids: the order-n gram at i is the pair (order-(n−1) gram at i, token
+    * at i+n−1), so one exact hash-map pass per order counts them. */
+  def gramRepetition(text: UTF8String, normalized: UTF8String,
+      orders: Array[Int]): InternalRow = {
+    val out = Array.fill[Any](3 + 4 * orders.length)(0L)
+    val lines = text.split(NewLine, -1)
+    val lineCnt = countsAt(denseIds(lines.length)(lines(_)))
+    var lineChars = 0L
+    var dupLineChars = 0L
+    for (i <- lines.indices) {
+      val c = lines(i).numChars
+      lineChars += c
+      if (lineCnt(i) >= 2) dupLineChars += c
+    }
+    val toks = normalized.split(Space, -1)
+    val t = toks.length
+    val tokLen = toks.map(_.numChars)
+    val cum = tokLen.scanLeft(0L)(_ + _)
+    out(0) = cum(t)
+    out(1) = lineChars
+    out(2) = dupLineChars
+    val tokIds = denseIds(t)(toks(_))
+    var ids = tokIds
+    var n = 1
+    while (n <= orders.max && n <= t) {
+      if (n > 1) {
+        val prev = ids
+        val last = n - 1
+        ids = denseIds(t - last)(g => (prev(g).toLong << 32) | tokIds(g + last))
+      }
+      val k = orders.indexOf(n)
+      if (k >= 0) {
+        val g = ids.length
+        val cnt = countsAt(ids)
+        val top = cnt.max
+        var topChars = 0L
+        var dupChars = 0L
+        var reach = -1 // last token spanned by a duplicated gram so far
+        var j = 0
+        while (j < t) {
+          if (j < g) {
+            if (cnt(j) == top) topChars = math.max(topChars, cum(j + n) - cum(j))
+            if (cnt(j) >= 2) reach = j + n - 1
+          }
+          if (j <= reach) dupChars += tokLen(j)
+          j += 1
+        }
+        out(3 + 4 * k) = g.toLong
+        out(4 + 4 * k) = top.toLong
+        out(5 + 4 * k) = topChars
+        out(6 + 4 * k) = dupChars
+      }
+      n += 1
+    }
+    new GenericInternalRow(out)
+  }
+}
+
+/** Expression form of [[TextKernels.gramRepetition]]: the raw `text`
+  * (for its lines) and its `normalized` tokenization (for its grams) in,
+  * one struct of exact counts out. Two children rather than one because
+  * lowercasing stays Spark's own `lower()` under
+  * [[graft.pipeline.Dedup.normalizeText]]. */
+case class GramRepetition(text: Expression, normalized: Expression,
+    orders: Seq[Int]) extends BinaryExpression {
+  require(orders.nonEmpty && orders.forall(_ >= 1) &&
+    orders.distinct.size == orders.size,
+    s"gram orders must be distinct and >= 1, got $orders")
+
+  @transient private lazy val orderArray = orders.toArray
+
+  override def left: Expression = text
+  override def right: Expression = normalized
+  override def dataType: DataType = GramRepetition.schema(orders)
+  override def prettyName: String = "graft_gram_repetition"
+
+  override protected def nullSafeEval(t: Any, n: Any): Any =
+    TextKernels.gramRepetition(t.asInstanceOf[UTF8String],
+      n.asInstanceOf[UTF8String], orderArray)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ords = ctx.addReferenceObj("orders", orderArray, "int[]")
+    defineCodeGen(ctx, ev,
+      (t, n) => s"graft.functions.TextKernels.gramRepetition($t, $n, $ords)")
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): GramRepetition =
+    copy(text = newLeft, normalized = newRight)
+}
+
+object GramRepetition {
+  /** `tok_chars`, `line_chars`, `dup_line_chars`, then per order n:
+    * `g{n}_count`, `g{n}_top_count`, `g{n}_top_chars`, `g{n}_dup_chars`. */
+  def schema(orders: Seq[Int]): StructType = StructType(
+    (Seq("tok_chars", "line_chars", "dup_line_chars") ++ orders.flatMap(n =>
+      Seq("count", "top_count", "top_chars", "dup_chars").map(f => s"g${n}_$f")))
+      .map(StructField(_, LongType, nullable = false)))
 }
 
 /** Expression form of [[TextKernels.hashedGramBuckets]]. Input must

@@ -150,8 +150,8 @@ object TextAnalysis {
     * ellipsis-/bullet-line ratios, duplicate-token fraction and top-2/3-gram
     * fractions. Pure per-row Column algebra over the shared
     * normalize/tokenize kernels — no shuffle at all, so the operator is
-    * embarrassingly parallel at any scale; each document is bounded, so the
-    * per-doc O(distinct·total) gram count is constant work per row.
+    * embarrassingly parallel at any scale; the gram counts come from one
+    * linear [[graft.functions.GramRepetition]] pass per document.
     * All fractions are deterministically rounded to 6 decimals
     * ([[roundDet]]) for cross-engine replay. */
   def repetitionSignals(text: Column): Seq[Column] = {
@@ -168,30 +168,40 @@ object TextAnalysis {
     val dupTok = bindArr(split(Dedup.normalizeText(joinLines(text)), " ")) { toks =>
       (size(toks) - size(array_distinct(toks))).cast(DoubleType) / size(toks)
     }
+    val rep = gramRepetition(text, 2, 3)
     Seq(
       roundDet(lineSigs.getField("dl"), 6).alias("dup_line_frac"),
       roundDet(lineSigs.getField("el"), 6).alias("ellipsis_line_frac"),
       roundDet(lineSigs.getField("bl"), 6).alias("bullet_line_frac"),
       roundDet(dupTok, 6).alias("dup_token_frac"),
-      topNgramFraction(text, 2).alias("top2gram_frac"),
-      topNgramFraction(text, 3).alias("top3gram_frac"))
+      topGramFraction(rep, 2).alias("top2gram_frac"),
+      topGramFraction(rep, 3).alias("top3gram_frac"))
   }
 
   /** Fraction of all word w-grams occupied by the single most frequent one
-    * — high values flag templated/boilerplate text. Counts are per-row HOF
-    * passes over the bound gram array (documents are bounded; no shuffle). */
-  def topNgramFraction(text: Column, w: Int): Column = roundDet(
-    bindArr(split(Dedup.normalizeText(joinLines(text)), " ")) { toks =>
-      bindArr(when(size(toks) >= w,
-        transform(sequence(lit(1), size(toks) - (w - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(w)))))
-        .otherwise(typedLit(Seq.empty[String]))) { grams =>
-        when(size(grams) >= 1,
-          array_max(transform(array_distinct(grams), g =>
-            size(filter(grams, x => x === g)))).cast(DoubleType) / size(grams))
-          .otherwise(lit(0.0))
-      }
-    }, 6)
+    * — high values flag templated/boilerplate text; 0.0 without a w-gram.
+    * The counts are exact per-document integers from one
+    * [[graft.functions.GramRepetition]] pass (documents are bounded; no
+    * shuffle). */
+  def topNgramFraction(text: Column, w: Int): Column =
+    topGramFraction(gramRepetition(text, w), w)
+
+  private def topGramFraction(rep: Column, w: Int): Column = {
+    val count = rep.getField(s"g${w}_count")
+    roundDet(when(count >= 1,
+      rep.getField(s"g${w}_top_count").cast(DoubleType) / count)
+      .otherwise(lit(0.0)), 6)
+  }
+
+  /** [[graft.functions.GramRepetition]] of `text`: its raw lines and the
+    * tokens of its newline-joined normalization, counted for `orders`. A
+    * null `text` gives a null struct. */
+  private def gramRepetition(text: Column, orders: Int*): Column =
+    org.apache.spark.sql.GraftColumns.column(
+      graft.functions.GramRepetition(
+        org.apache.spark.sql.GraftColumns.expression(text),
+        org.apache.spark.sql.GraftColumns.expression(
+          Dedup.normalizeText(joinLines(text))), orders))
 
   /** Character-WEIGHTED Gopher repetition signals (Rae et al. 2021 §A1.1
     * Table A1 — the char-fraction family the paper actually thresholds on;
@@ -199,69 +209,29 @@ object TextAnalysis {
     * identically on both engines: the char mass of a token or n-gram is its
     * length EXCLUDING the joining spaces; denominators are total raw-line
     * chars (line signal) and total normalized-token chars (gram signals);
-    * zero denominators → 0.0. `dup_line_char_frac` counts every occurrence
-    * of any line that appears ≥2×; `topNgram_char_frac` is the most
-    * frequent n-gram's count × char length over total (ties broken by max
-    * char length — a total order both engines replay); `dupNgram_char_frac`
-    * is Gopher's COVERAGE semantics: a token's chars count once if any
-    * duplicated n-gram window spans it (overlaps never double-count).
-    * Pure per-row HOF algebra over bounded documents — zero shuffles, so
-    * the operator stays embarrassingly parallel at any corpus scale; the
-    * per-doc O(G²) gram counting is the same bounded work
-    * [[repetitionSignals]] already does. */
+    * zero denominators → 0.0, and so does a null `text`.
+    * `dup_line_char_frac` counts every occurrence of any line that appears
+    * ≥2×; `topNgram_char_frac` is the most frequent n-gram's count × char
+    * length over total (ties broken by max char length — a total order
+    * both engines replay); `dupNgram_char_frac` is Gopher's COVERAGE
+    * semantics: a token's chars count once if any duplicated n-gram window
+    * spans it (overlaps never double-count). Every count comes from one
+    * [[graft.functions.GramRepetition]] pass per document, O(tokens ×
+    * max order) — zero shuffles, so the operator stays embarrassingly
+    * parallel at any corpus scale; only the divisions and the rounding are
+    * Column algebra. */
   def charRepetitionSignals(text: Column): Seq[Column] = {
-    val dupLine = bindArr(split(text, "\n")) { lines =>
-      val tot = aggregate(lines, lit(0L), (a, l) => a + length(l).cast(LongType))
-      val dup = aggregate(lines, lit(0L), (a, l) =>
-        a + when(size(filter(lines, x => x === l)) >= 2,
-          length(l).cast(LongType)).otherwise(lit(0L)))
-      when(tot > 0, dup.cast(DoubleType) / tot.cast(DoubleType))
+    val rep = gramRepetition(text, 2, 3, 4, 5, 10)
+    def frac(num: Column, den: Column): Column =
+      when(den > 0, num.cast(DoubleType) / den.cast(DoubleType))
         .otherwise(lit(0.0))
-    }
-    val toksCol = split(Dedup.normalizeText(joinLines(text)), " ")
-    def withToks(f: (Column, Column) => Column): Column = bindArr(toksCol) {
-      toks =>
-        val tot = aggregate(toks, lit(0L), (a, t) => a + length(t).cast(LongType))
-        when(tot > 0, f(toks, tot)).otherwise(lit(0.0))
-    }
-    def grams(toks: Column, n: Int): Column =
-      when(size(toks) >= n,
-        transform(sequence(lit(1), size(toks) - (n - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(n)))))
-        .otherwise(typedLit(Seq.empty[String]))
-    def topChar(n: Int): Column = withToks { (toks, tot) =>
-      bindArr(grams(toks, n)) { gs =>
-        val cnt = (g: Column) => size(filter(gs, x => x === g))
-        val maxCnt = array_max(transform(array_distinct(gs), g => cnt(g)))
-        val maxLen = array_max(transform(
-          filter(array_distinct(gs), g => cnt(g) === maxCnt),
-          g => length(g) - (n - 1)))
-        when(size(gs) >= 1,
-          (maxCnt.cast(LongType) * maxLen.cast(LongType)).cast(DoubleType) /
-            tot.cast(DoubleType))
-          .otherwise(lit(0.0))
-      }
-    }
-    def dupCover(n: Int): Column = withToks { (toks, tot) =>
-      bindArr(grams(toks, n)) { gs =>
-        bindArr(transform(gs, g => size(filter(gs, x => x === g)) >= 2)) {
-          flags =>
-            val nG = size(gs)
-            when(nG >= 1,
-              aggregate(sequence(lit(1), size(toks)), lit(0L), (acc, i) =>
-                acc + when(
-                  exists(
-                    sequence(greatest(lit(1), i - (n - 1)), least(i, nG)),
-                    s => element_at(flags, s)),
-                  length(element_at(toks, i)).cast(LongType))
-                  .otherwise(lit(0L)))
-                .cast(DoubleType) / tot.cast(DoubleType))
-              .otherwise(lit(0.0))
-        }
-      }
-    }
+    val tot = rep.getField("tok_chars")
+    def topChar(n: Int): Column = frac(
+      rep.getField(s"g${n}_top_count") * rep.getField(s"g${n}_top_chars"), tot)
+    def dupCover(n: Int): Column = frac(rep.getField(s"g${n}_dup_chars"), tot)
     Seq(
-      roundDet(dupLine, 6).alias("dup_line_char_frac"),
+      roundDet(frac(rep.getField("dup_line_chars"), rep.getField("line_chars")),
+        6).alias("dup_line_char_frac"),
       roundDet(topChar(2), 6).alias("top2gram_char_frac"),
       roundDet(topChar(3), 6).alias("top3gram_char_frac"),
       roundDet(topChar(4), 6).alias("top4gram_char_frac"),

@@ -1,17 +1,21 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, IntegerType,
+  LongType, StringType, StructField, StructType}
 
 import graft.SparkTestBase
 
 /** Differential locks for the native text kernels (r18 optimization):
-  * [[graft.functions.CollapseNonAlnum]], [[graft.functions.WordNGrams]]
-  * and [[graft.functions.WinnowGrams]] must be bit-identical to the
-  * Column-algebra forms they replaced — the regex normalize, the
-  * split+transform n-gram assembly, and the interpreted closed-form
-  * winnow selection (reconstructed here verbatim from the pre-r18
+  * [[graft.functions.CollapseNonAlnum]], [[graft.functions.WordNGrams]],
+  * [[graft.functions.WinnowGrams]] and [[graft.functions.GramRepetition]]
+  * must be bit-identical to the Column-algebra forms they replaced — the
+  * regex normalize, the split+transform n-gram assembly, the interpreted
+  * closed-form winnow selection and the filter-inside-transform gram
+  * counts (reconstructed here verbatim from the replaced
   * implementations). */
 class TextKernelsSpec extends SparkTestBase {
   import spark.implicits._
@@ -180,6 +184,208 @@ class TextKernelsSpec extends SparkTestBase {
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       assert(got == want, s"buckets=$buckets seed=$seed") // incl. ORDER
     }
+  }
+
+  // the HOF repetition forms GramRepetition replaced, verbatim
+  private def bindArr(a: Column)(f: Column => Column): Column =
+    element_at(transform(array(a), f), 1)
+  private def joinLines(text: Column): Column = regexp_replace(text, "\n", " ")
+  private def roundDet(c: Column, d: Int): Column = TextAnalysis.roundDet(c, d)
+
+  private def oldTopNgramFraction(text: Column, w: Int): Column = roundDet(
+    bindArr(split(Dedup.normalizeText(joinLines(text)), " ")) { toks =>
+      bindArr(when(size(toks) >= w,
+        transform(sequence(lit(1), size(toks) - (w - 1)),
+          i => concat_ws(" ", slice(toks, i, lit(w)))))
+        .otherwise(typedLit(Seq.empty[String]))) { grams =>
+        when(size(grams) >= 1,
+          array_max(transform(array_distinct(grams), g =>
+            size(filter(grams, x => x === g)))).cast(DoubleType) / size(grams))
+          .otherwise(lit(0.0))
+      }
+    }, 6)
+
+  private def oldCharRepetitionSignals(text: Column): Seq[Column] = {
+    val dupLine = bindArr(split(text, "\n")) { lines =>
+      val tot = aggregate(lines, lit(0L), (a, l) => a + length(l).cast(LongType))
+      val dup = aggregate(lines, lit(0L), (a, l) =>
+        a + when(size(filter(lines, x => x === l)) >= 2,
+          length(l).cast(LongType)).otherwise(lit(0L)))
+      when(tot > 0, dup.cast(DoubleType) / tot.cast(DoubleType))
+        .otherwise(lit(0.0))
+    }
+    val toksCol = split(Dedup.normalizeText(joinLines(text)), " ")
+    def withToks(f: (Column, Column) => Column): Column = bindArr(toksCol) {
+      toks =>
+        val tot = aggregate(toks, lit(0L), (a, t) => a + length(t).cast(LongType))
+        when(tot > 0, f(toks, tot)).otherwise(lit(0.0))
+    }
+    def grams(toks: Column, n: Int): Column =
+      when(size(toks) >= n,
+        transform(sequence(lit(1), size(toks) - (n - 1)),
+          i => concat_ws(" ", slice(toks, i, lit(n)))))
+        .otherwise(typedLit(Seq.empty[String]))
+    def topChar(n: Int): Column = withToks { (toks, tot) =>
+      bindArr(grams(toks, n)) { gs =>
+        val cnt = (g: Column) => size(filter(gs, x => x === g))
+        val maxCnt = array_max(transform(array_distinct(gs), g => cnt(g)))
+        val maxLen = array_max(transform(
+          filter(array_distinct(gs), g => cnt(g) === maxCnt),
+          g => length(g) - (n - 1)))
+        when(size(gs) >= 1,
+          (maxCnt.cast(LongType) * maxLen.cast(LongType)).cast(DoubleType) /
+            tot.cast(DoubleType))
+          .otherwise(lit(0.0))
+      }
+    }
+    def dupCover(n: Int): Column = withToks { (toks, tot) =>
+      bindArr(grams(toks, n)) { gs =>
+        bindArr(transform(gs, g => size(filter(gs, x => x === g)) >= 2)) {
+          flags =>
+            val nG = size(gs)
+            when(nG >= 1,
+              aggregate(sequence(lit(1), size(toks)), lit(0L), (acc, i) =>
+                acc + when(
+                  exists(
+                    sequence(greatest(lit(1), i - (n - 1)), least(i, nG)),
+                    s => element_at(flags, s)),
+                  length(element_at(toks, i)).cast(LongType))
+                  .otherwise(lit(0L)))
+                .cast(DoubleType) / tot.cast(DoubleType))
+              .otherwise(lit(0.0))
+        }
+      }
+    }
+    Seq(
+      roundDet(dupLine, 6).alias("dup_line_char_frac"),
+      roundDet(topChar(2), 6).alias("top2gram_char_frac"),
+      roundDet(topChar(3), 6).alias("top3gram_char_frac"),
+      roundDet(topChar(4), 6).alias("top4gram_char_frac"),
+      roundDet(dupCover(5), 6).alias("dup5gram_char_frac"),
+      roundDet(dupCover(10), 6).alias("dup10gram_char_frac"))
+  }
+
+  /** Repetition edge cases on top of the adversarial corpus: CRLF and
+    * trailing/empty lines, non-ASCII lines (char vs byte length), "",
+    * one token, documents shorter than the 10-gram, count ties whose
+    * grams differ in char length, and whole-line repeats. */
+  private val repetitionTexts: Seq[String] = texts ++ Seq(
+    "one\r\ntwo\r\none\r\ntwo",
+    "one\ntwo\none\n",
+    "\n\n",
+    "\nlead\n\nlead\n\n",
+    "über straße\nüber straße\nuber strasse",
+    "日本\n日本\nab\nab",
+    "word",
+    "x y z x y z",
+    "a bbbb a bbbb cc d cc d",
+    "aa b aa b aaaa b aaaa b",
+    "ab cd ab cd ab cd ef gh ef gh ef gh",
+    "- bullet\n- bullet\n* star ...\nplain line",
+    "same line\nsame line\nsame line",
+    "a b c d e f g h i j a b c d e f g h i j")
+
+  /** Raw UTF-8 bytes per document; `None` is a null text. The extra
+    * documents are not valid UTF-8, which `split` decodes to U+FFFD. */
+  private def repetitionDocs(docs: Seq[Option[Array[Byte]]]): DataFrame = {
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("raw", BinaryType, nullable = true)))
+    val rows = docs.zipWithIndex.map { case (d, i) => Row(i.toLong, d.orNull) }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+      .select(col("id"), col("raw").cast(StringType).alias("text"))
+  }
+
+  private val hostileUtf8: Seq[Array[Byte]] = Seq(
+    Array(0x61, 0xff, 0x0a, 0x61, 0xff, 0x0a, 0x62),
+    Array(0xc3, 0x0a, 0xc3, 0x20, 0x61, 0x20, 0x61),
+    // distinct byte lines that decode to the same U+FFFD line
+    Array(0xe2, 0x82, 0x0a, 0xe2, 0x83, 0x0a, 0x78),
+    // a truncated 4-byte lead: 1 char as raw bytes, 4 once decoded
+    Array(0xf0, 0x61, 0x61, 0x61, 0x0a, 0xf0, 0x61, 0x61, 0x61, 0x0a, 0x62)
+  ).map(_.map(_.toByte))
+
+  /** Run `f` with every projection JIT-compiled (no fallback), or with
+    * whole-stage codegen off and every projection interpreted. */
+  private def inCodegenMode[T](codegen: Boolean)(f: => T): T = {
+    val settings = Seq(
+      "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"),
+      "spark.sql.codegen.wholeStage" -> codegen.toString)
+    val saved = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** id → the raw bits of every output double (so -0.0 vs 0.0 and NaN
+    * payloads count as differences). */
+  private def bitsById(df: DataFrame, cols: Seq[Column]): Map[Long, Seq[Long]] =
+    df.select(col("id") +: cols: _*).collect().map { r =>
+      r.getLong(0) -> (1 until r.size).map(i =>
+        if (r.isNullAt(i)) Long.MinValue
+        else java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
+    }.toMap
+
+  /** New vs verbatim-old repetition signals, under both codegen modes. */
+  private def assertRepetitionParity(df: DataFrame): Unit =
+    for (codegen <- Seq(true, false)) inCodegenMode(codegen) {
+      val got = bitsById(df,
+        TextAnalysis.charRepetitionSignals(col("text")) ++
+          Seq(TextAnalysis.topNgramFraction(col("text"), 2),
+            TextAnalysis.topNgramFraction(col("text"), 3)) ++
+          TextAnalysis.repetitionSignals(col("text")).takeRight(2))
+      val want = bitsById(df,
+        oldCharRepetitionSignals(col("text")) ++
+          Seq(oldTopNgramFraction(col("text"), 2),
+            oldTopNgramFraction(col("text"), 3),
+            oldTopNgramFraction(col("text"), 2),
+            oldTopNgramFraction(col("text"), 3)))
+      assert(got.size == df.count())
+      val diffs = got.keySet.filter(k => got(k) != want(k)).toSeq.sorted
+      assert(diffs.isEmpty, s"codegen=$codegen: rows differ at ids ${diffs.take(5)}: " +
+        diffs.take(3).map(k => s"$k got ${got(k)} want ${want(k)}").mkString("; "))
+    }
+
+  test("GramRepetition matches the HOF charRepetitionSignals and " +
+      "topNgramFraction bit-for-bit on the adversarial corpus, " +
+      "codegen and interpreted") {
+    val docs = repetitionTexts.map(t => Some(t.getBytes(UTF_8))) ++
+      Seq(None) ++ hostileUtf8.map(Some(_))
+    val df = repetitionDocs(docs)
+    assertRepetitionParity(df)
+    // null and "" are all-zero in every column, never null
+    val blank = Set(repetitionTexts.indexOf("").toLong, repetitionTexts.size.toLong)
+    val zero = java.lang.Double.doubleToRawLongBits(0.0)
+    inCodegenMode(codegen = true) {
+      bitsById(df.filter(col("id").isin(blank.toSeq: _*)),
+        TextAnalysis.charRepetitionSignals(col("text")) ++
+          TextAnalysis.repetitionSignals(col("text")).takeRight(2))
+        .foreach { case (id, bits) => assert(bits.forall(_ == zero), s"id $id: $bits") }
+    }
+  }
+
+  test("GramRepetition matches the HOF forms on generated documents from " +
+      "3-6 word vocabularies (many repeats and count ties)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val pool = Seq("a", "bb", "ccc", "Dddd", "ee!", "ü", "a.b", "x", "yy")
+    val doc = for {
+      k <- Gen.choose(3, 6)
+      vocab <- Gen.pick(k, pool)
+      nLines <- Gen.choose(1, 5)
+      lines <- Gen.listOfN(nLines,
+        Gen.choose(0, 14).flatMap(n => Gen.listOfN(n, Gen.oneOf(vocab.toSeq))))
+      eol <- Gen.oneOf("\n", "\r\n", " \n")
+      trailing <- Gen.oneOf("", "\n")
+    } yield lines.map(_.mkString(" ")).mkString(eol) + trailing
+    val prop = Prop.forAll(Gen.listOfN(60, doc)) { ds =>
+      assertRepetitionParity(repetitionDocs(ds.map(d => Some(d.getBytes(UTF_8)))))
+      true
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(6), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("WinnowGrams guarantees: shared fingerprint for long-enough matches") {
